@@ -13,6 +13,7 @@ Modes:
                           the full operator, not what count() can prune.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
+--cpus defaults to SPARK_GRAFT_CPUS, else the CPUs this process may run on.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from bench import DEFAULT_CPUS  # noqa: E402
 
 
 def _queries():
@@ -73,8 +76,7 @@ def run(sf_dir: str, cpus: int, names: list[str], noop: bool) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--noop", action="store_true")
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -46,7 +46,7 @@ def main():
     import __spark_entry__ as entrymod
     from wikdict_gen_spark.session import get_spark
 
-    spark = get_spark(parallelism=8, app_name="verify_entry", shuffle_partitions=8)
+    spark = get_spark(app_name="verify_entry")
 
     con = duckdb.connect()
     for t in TABLES:

@@ -48,34 +48,6 @@ class TestHashedVerificationJoin:
         assert len(out) < 60
 
 
-class TestDriverGcOpts:
-    """Default driver-JVM memory flags: THP + pinned pre-touched heap,
-    Xms derived from the configured driver memory, safe fallbacks."""
-
-    def test_derived_from_driver_mem(self):
-        from wikdict_gen_spark.session import _driver_gc_opts
-
-        opts = _driver_gc_opts("32g")
-        assert "-XX:+UseTransparentHugePages" in opts
-        assert "-XX:+AlwaysPreTouch" in opts
-        assert f"-Xms{32 * 1024 - 4096}m" in opts
-
-    def test_small_heap_and_unparseable_fall_back_flagless(self):
-        from wikdict_gen_spark.session import _driver_gc_opts
-
-        # Xms would undershoot 1g -> no pin (pre-touch pointless)
-        assert _driver_gc_opts("4g") == ""
-        # never emit an -Xms we computed from a string we didn't understand
-        # (an Xms above Xmx aborts the JVM at launch)
-        assert _driver_gc_opts("2048000k") == ""
-        assert _driver_gc_opts("lots") == ""
-
-    def test_mb_unit_parsed(self):
-        from wikdict_gen_spark.session import _driver_gc_opts
-
-        assert "-Xms16384m" in _driver_gc_opts("20480m")
-
-
 class TestNarrowFormDistinct:
     def test_int_distinct_equals_string_distinct(self, spark):
         li = spark.range(500).selectExpr(

@@ -1,0 +1,49 @@
+"""Host-derived session defaults, checked without starting a JVM."""
+
+import pytest
+
+from wikdict_gen_spark.session import session_conf
+
+GB = 2**30
+
+
+def test_small_host_defaults():
+    conf = session_conf(env={}, host=(4, 15 * GB))
+    assert conf["spark.master"] == "local[4]"
+    assert conf["spark.driver.memory"] == "6g"
+    assert conf["spark.sql.shuffle.partitions"] == "4"
+    opts = conf["spark.driver.extraJavaOptions"]
+    assert "-Xms" not in opts and "TransparentHugePages" not in opts
+    assert "AlwaysPreTouch" not in opts
+    assert "-XX:ReservedCodeCacheSize=1g" in opts
+    assert "spark.local.dir" not in conf
+
+
+def test_large_host_defaults():
+    conf = session_conf(env={}, host=(32, 125 * GB))
+    assert conf["spark.master"] == "local[32]"
+    assert conf["spark.driver.memory"] == "50g"
+
+
+def test_overrides():
+    env = {"SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "3072m",
+           "SPARK_GRAFT_LOCAL_DIR": "/tmp/spark-local"}
+    conf = session_conf(env=env, host=(4, 15 * GB))
+    assert conf["spark.master"] == "local[2]"
+    assert conf["spark.driver.memory"] == "3072m"
+    assert conf["spark.local.dir"] == "/tmp/spark-local"
+    # an explicit parallelism wins over the env
+    conf = session_conf(8, 16, env=env, host=(4, 15 * GB))
+    assert conf["spark.master"] == "local[8]"
+    assert conf["spark.sql.shuffle.partitions"] == "16"
+
+
+@pytest.mark.parametrize("mem", ["lots", "2048000k", "6 gb", ""])
+def test_unparseable_driver_mem_raises(mem):
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
+        session_conf(env={"SPARK_GRAFT_DRIVER_MEM": mem}, host=(4, 15 * GB))
+
+
+def test_driver_mem_above_ram_raises():
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM.*RAM"):
+        session_conf(env={"SPARK_GRAFT_DRIVER_MEM": "32g"}, host=(4, 15 * GB))

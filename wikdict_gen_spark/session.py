@@ -1,229 +1,129 @@
-"""SparkSession construction with scale-oriented defaults.
+"""SparkSession construction: one ``local[k]`` session sized from the host.
 
 One place to set every knob so tests, bench and the pipeline run the same
-configuration.  Defaults target the sandbox (single JVM, local[k]); on a
-real cluster the same settings apply per-executor and the master URL comes
-from spark-submit.
+configuration.  Cores and driver memory default to what the host has;
+three deployment settings override them:
+
+- ``SPARK_GRAFT_CPUS``: local core count (default: the CPUs this process
+  may run on);
+- ``SPARK_GRAFT_DRIVER_MEM``: driver heap as ``<n>g`` or ``<n>m``
+  (default: 40% of physical RAM, in whole gigabytes);
+- ``SPARK_GRAFT_LOCAL_DIR``: ``spark.local.dir`` for shuffle and spill
+  files (default: Spark's own, under ``java.io.tmpdir``).
+
+Any other Spark setting goes through ``get_spark(extra_conf=...)``.
 """
 
 from __future__ import annotations
 
 import os
 import re
-import tempfile
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
+# Share of physical RAM given to the driver JVM, which in local[k] mode is
+# also the only executor.  At 60% the KG pipeline peaked at 12.3 GB of
+# process memory on a 15 GB host; 40% leaves room for the Python workers.
+DRIVER_MEM_SHARE = 0.4
 
-def _driver_gc_opts(driver_mem: str) -> str:
-    """Default driver-JVM memory flags (overridable via SPARK_GRAFT_GC_OPTS).
 
-    ``-XX:+UseTransparentHugePages -Xms<heap-4g> -XX:+AlwaysPreTouch``:
-    the driver JVM in local[k] mode IS the executor, and the sustained
-    pipeline is memory-subsystem-bound — under a hypervisor every
-    first-touch page fault is a VM exit plus host-side backing work, and
-    this box's measured zeroing floor is ~250 MB/s when the host has not
-    yet backed the guest frames.  madvise'd huge pages cut the fault and
-    TLB-shootdown count 512x, and the startup pre-touch moves the
-    remaining cost out of the measured region entirely (it is a
-    once-per-boot host warmup: 116s cold, <1-15s on every later launch).
-    Measured on the full fused pipeline, interleaved same-session A/B,
-    local[32]: 44.8k -> 68.9k and 27.0k -> 86.5k triples/s, with the
-    18-query headline suite neutral (13.55s vs 13.74s).  THP alone
-    (without the pre-touch) is NOT safe: the 2M-page faults then land
-    inside short queries and the same headline regresses 14s -> 26s.
-    The -4g slack leaves G1 room above Xms so the tail never faults at
-    2M-page cost mid-query; if the driver memory string cannot be
-    parsed, fall back to THP-less defaults (never guess an Xms that
-    could exceed Xmx, which would abort the JVM at launch).
-    """
-    m = re.fullmatch(r"(\d+)([gGmM])", driver_mem.strip())
-    if not m:
-        return ""
-    n, unit = int(m.group(1)), m.group(2).lower()
-    mb = n * 1024 if unit == "g" else n
-    xms_mb = mb - 4096
-    if xms_mb < 1024:
-        return ""
+def host_resources() -> tuple[int, int]:
+    """(usable CPUs, physical RAM in bytes) of this host."""
     return (
-        f"-XX:+UseTransparentHugePages -Xms{xms_mb}m -XX:+AlwaysPreTouch"
+        len(os.sched_getaffinity(0)),
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"),
     )
+
+
+def _driver_mem(env: Mapping[str, str], ram: int) -> str:
+    value = env.get("SPARK_GRAFT_DRIVER_MEM")
+    if value is None:
+        return f"{max(1, int(ram * DRIVER_MEM_SHARE / 2**30))}g"
+    m = re.fullmatch(r"(\d+)([gm])", value.strip().lower())
+    if not m:
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM={value!r}: expected <n>g or <n>m"
+        )
+    mem = int(m.group(1)) * (2**30 if m.group(2) == "g" else 2**20)
+    if mem > ram:
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM={value!r} exceeds the host's "
+            f"{ram / 2**30:.1f} GiB of physical RAM"
+        )
+    return m.group(0)
+
+
+def session_conf(
+    parallelism: int | None = None,
+    shuffle_partitions: int | None = None,
+    env: Mapping[str, str] = os.environ,
+    host: tuple[int, int] | None = None,
+) -> dict[str, str]:
+    """The Spark conf ``get_spark`` launches with; no JVM is started.
+
+    ``host`` is (CPUs, RAM bytes), default ``host_resources()``.  Raises
+    ValueError for a driver memory that does not parse or exceeds RAM,
+    so misconfiguration fails here rather than at JVM launch.
+    """
+    host_cpus, ram = host or host_resources()
+    cpus = parallelism or int(env.get("SPARK_GRAFT_CPUS", host_cpus))
+    conf = {
+        "spark.master": f"local[{cpus}]",
+        "spark.driver.memory": _driver_mem(env, ram),
+        # sandbox intermediates are hundreds of MB: the 64m default lets AQE
+        # coalesce exchanges to a handful of partitions, and that coarse
+        # layout freezes into the stage checkpoints, capping downstream
+        # parallelism (observed: 4-task aggregation stages straggling)
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+        # serialized localCheckpoint blocks stay uncompressed (Spark's
+        # default compresses them): they are re-read by every consumer of a
+        # checkpointed stage and by the session-memoized query trunks
+        "spark.rdd.compress": "false",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
+        "spark.default.parallelism": str(cpus),
+        # Arrow is the transport for every pandas UDF in the engine
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # deterministic sessions: no timezone surprises in timestamp columns
+        "spark.sql.session.timeZone": "UTC",
+        # long pipelines: reclaim broadcast/shuffle state promptly
+        "spark.cleaner.periodicGC.interval": "2min",
+        "spark.locality.wait": "500ms",
+        # many-stage pipelines generate hundreds of codegen classes; the
+        # default 240m code cache fills and the JIT stops compiling, which
+        # silently triples stage times late in a run
+        "spark.driver.extraJavaOptions":
+            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # local corpora are few big files; small split size keeps scans wide
+        "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
+    }
+    local_dir = env.get("SPARK_GRAFT_LOCAL_DIR")
+    if local_dir:
+        conf["spark.local.dir"] = local_dir
+    return conf
 
 
 def get_spark(
     parallelism: int | None = None,
     app_name: str = "wikdict_gen_spark",
     shuffle_partitions: int | None = None,
-    executors: int | None = None,
-    executor_cores: int = 2,
-    executor_mem_mb: int = 20480,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    parallelism: local core count; default $SPARK_GRAFT_CPUS or 32.
+    parallelism: local core count; default $SPARK_GRAFT_CPUS, else the
+    host's usable CPUs.
     shuffle_partitions: defaults to the core count — at sandbox data sizes
-    more partitions only add scheduling overhead; at cluster scale this is
-    overridden to O(total cores).
-    executors: when set, use `local-cluster[N,C,M]` instead of `local[k]` —
-    N separate executor JVMs with their own heaps and GCs, the faithful
-    sandbox emulation of an N-executor cluster (used by the scaling bench;
-    on a real cluster spark-submit provides the master instead).
+    more partitions only add scheduling overhead.
+    extra_conf: Spark settings applied last, over the defaults.
     """
-    cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if executors is not None:
-        cpus = executors * executor_cores
-    shuffle = shuffle_partitions or cpus
-    # shuffle spill to RAM-backed storage when available: the sandbox has
-    # 125G RAM and small shuffles; on a cluster spark.local.dir comes from
-    # the cluster manager and this default is irrelevant
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/spark-local"
-    master = (
-        f"local-cluster[{executors},{executor_cores},{executor_mem_mb}]"
-        if executors is not None
-        else f"local[{cpus}]"
-    )
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
-    # SPARK_GRAFT_GC_OPTS replaces the memory-flag defaults wholesale so a
-    # production deployment (or an A/B) can run any collector/THP regime;
-    # the JIT/code-cache flags are unconditional (they fix a measured
-    # late-run cliff, see below) and apply to driver and executor alike.
-    # Executor JVMs (local-cluster emulation only; a real cluster sets
-    # executor flags via spark-submit) do NOT get the pre-touch defaults:
-    # their heaps are sized by executor_mem_mb, and N executors eagerly
-    # pre-touching N heaps at once is exactly the sandbox-memory pressure
-    # the emulation is meant to avoid.
-    gc_opts = os.environ.get("SPARK_GRAFT_GC_OPTS")
-    driver_gc = gc_opts if gc_opts is not None else _driver_gc_opts(driver_mem)
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        # local-cluster's [N,C,M] memory number only sizes the WORKER's
-        # allocation budget; the executor JVM heap itself comes from
-        # spark.executor.memory (default 1g — far too small for serialized
-        # checkpoint blocks).  Harmless under local[k] (driver == executor).
-        .config("spark.executor.memory", f"{executor_mem_mb - 2048}m")
-        # AQE: runtime partition coalescing + skew-join splitting
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.enabled",
-            os.environ.get("SPARK_GRAFT_AQE_COALESCE", "true"),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # sandbox intermediates are hundreds of MB: the 64m default lets AQE
-        # coalesce exchanges to a handful of partitions, and that coarse
-        # layout freezes into the stage checkpoints, capping downstream
-        # parallelism (observed: 4-task aggregation stages straggling).
-        # At cluster scale override via env to 64m+.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "8m"),
-        )
-        # lz4 on serialized cached blocks (the localCheckpoint storage):
-        # multi-consumer re-scans of checkpointed stages are memory-
-        # bandwidth traffic on a single box, and compressed blocks trade
-        # cheap lz4 CPU for 2-4x less of it (A/B-able via env)
-        .config(
-            "spark.rdd.compress",
-            os.environ.get("SPARK_GRAFT_RDD_COMPRESS", "false"),
-        )
-        # shuffle/broadcast/checkpoint block codec: lz4 (default) vs zstd —
-        # on a single box every shuffle byte is memory-subsystem traffic
-        # (spark.local.dir is tmpfs), so a denser codec trades CPU for the
-        # scarcer resource; A/B-able via env for the scaling bench
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.default.parallelism", str(cpus))
-        # Arrow is the transport for every pandas UDF in the engine
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # deterministic sessions: no timezone surprises in timestamp columns
-        .config("spark.sql.session.timeZone", "UTC")
-        # long pipelines: reclaim broadcast/shuffle state promptly
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        # single-host sandbox: a "remote" block fetch between executor
-        # processes is a loopback copy, so the 3s default process-local
-        # wait mostly stalls (measured ~10s/stage on stages reading another
-        # executor's checkpoint blocks), while 0 overshoots into pure
-        # remote-fetch churn; 500ms measured best.  On a real cluster with
-        # rack topology, override via env.
-        .config("spark.locality.wait",
-                os.environ.get("SPARK_GRAFT_LOCALITY_WAIT", "500ms"))
-        # many-stage pipelines generate hundreds of codegen classes; the
-        # default 240m code cache fills and the JIT stops compiling, which
-        # silently triples stage times late in a run.  GC stays at the JVM
-        # default (G1) but is a knob (SPARK_GRAFT_GC_OPTS): measured this
-        # round, ParallelGC is ~30% faster on an isolated explode->
-        # serialized-checkpoint trunk materialization (records, GC-bound:
-        # 210s of 799s task time under G1) yet a wash on the full fused
-        # pipeline and ~10% SLOWER on the sf1.0-scale headline suite
-        # (q_token_index 7.1s vs 5.0s, q_topk_mean_norm 4.9 vs 4.2 —
-        # old-gen churn from wide aggregations suits G1's regioned heap);
-        # G1 is the right default, the knob records the trade.  The driver
-        # additionally defaults to THP + pinned-and-pretouched heap — the
-        # measurements and the why live on _driver_gc_opts above.
-        .config(
-            "spark.driver.extraJavaOptions",
-            ("-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing "
-             + driver_gc).strip(),
-        )
-        # same JIT/GC regime in separate executor JVMs (local-cluster mode;
-        # no-op under local[k] where driver == executor)
-        .config(
-            "spark.executor.extraJavaOptions",
-            ("-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing "
-             + (gc_opts or "")).strip(),
-        )
-        .config("spark.driver.memory", driver_mem)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local corpora are few big files; small split size keeps scans wide
-        # (on a real cluster the default 128m is right — override via env)
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(32 * 1024 * 1024)),
-        )
-    )
-    if local_dir:
-        builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
+    conf = {**session_conf(parallelism, shuffle_partitions), **(extra_conf or {})}
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    if executors is not None:
-        # executor JVMs spawn their own python workers, which do not
-        # inherit the driver's sys.path — ship the package the same way
-        # spark-submit --py-files does (north_rule: run via --py-files)
-        spark.sparkContext.addPyFile(_package_zip())
-    return spark
-
-
-def _package_zip() -> str:
-    """Zip wikdict_gen_spark for addPyFile (the --py-files payload).
-
-    Written to a unique temp name and os.replace()d into place: two
-    concurrent local-cluster sessions on one host would otherwise race on
-    a fixed path — one truncating the zip while the other's executors
-    fetch it.  The rename is atomic, so every fetch sees a complete zip.
-    """
-    import zipfile
-    from pathlib import Path
-
-    pkg_dir = Path(__file__).resolve().parent
-    out = Path(tempfile.gettempdir()) / "wikdict_gen_spark_pyfiles.zip"
-    fd, tmp = tempfile.mkstemp(
-        suffix=".zip", prefix="wikdict_gen_spark_pyfiles.", dir=out.parent
-    )
-    os.close(fd)
-    with zipfile.ZipFile(tmp, "w") as z:
-        for p in sorted(pkg_dir.rglob("*.py")):
-            z.write(p, f"wikdict_gen_spark/{p.relative_to(pkg_dir)}")
-    os.replace(tmp, out)
-    return str(out)
+    return builder.getOrCreate()
 
 
 def stop_spark() -> None:
