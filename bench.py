@@ -102,14 +102,12 @@ def bench_corpus(n_concepts: int | None = None) -> str:
 def pipeline_throughput(cpus: int) -> dict:
     """Full pipeline (extract -> kg_edges) wall time and triples/sec.
 
-    Mode via $SPARK_GRAFT_BENCH_MODE: 'fused' (default — one lazy lineage,
-    terminal write only: the cluster-job shape) or 'checkpoint' (committed
-    snapshot per stage: the resumable production shape).
+    Fused mode (one lazy lineage, terminal write only: the cluster-job
+    shape); the checkpointed shape is measured by perfbench's kg_build.
     """
     from wikdict_gen_spark.pipeline import run_pipeline
     from wikdict_gen_spark.session import get_spark
 
-    fused = os.environ.get("SPARK_GRAFT_BENCH_MODE", "fused") == "fused"
     pages = bench_corpus()
     work = tempfile.mkdtemp(prefix=f"wikdict_bench_{cpus}_")
     # 4 shuffle partitions per core: the wide aggregations (composition,
@@ -122,18 +120,15 @@ def pipeline_throughput(cpus: int) -> dict:
     # outweighs the JIT benefit) — keep warmup minimal
     spark.read.parquet(pages).limit(1000).count()
     t0 = time.monotonic()
-    out = run_pipeline(spark, pages, work, fused=fused)
-    if fused:
-        out["kg_edges"].write.mode("overwrite").parquet(f"{work}/kg_edges_out")
-        triples = spark.read.parquet(f"{work}/kg_edges_out").count()
-    else:
-        triples = out["kg_edges"].count()
+    out = run_pipeline(spark, pages, work, fused=True)
+    out["kg_edges"].write.mode("overwrite").parquet(f"{work}/kg_edges_out")
+    triples = spark.read.parquet(f"{work}/kg_edges_out").count()
     wall = time.monotonic() - t0
     spark.stop()
     shutil.rmtree(work, ignore_errors=True)
     return {"cpus": cpus, "wall_s": round(wall, 2),
             "triples": triples,
-            "mode": "fused" if fused else "checkpoint",
+            "mode": "fused",
             "triples_per_sec": round(triples / wall, 1)}
 
 

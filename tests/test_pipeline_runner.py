@@ -1,0 +1,71 @@
+"""Stage-table runner (wikdict_gen_spark/pipeline.py): the fused mode's
+connected-components worker thread, stop_after validation, and the
+per-table `_metrics` the checkpointed mode records."""
+
+import pytest
+
+from wikdict_gen_spark.catalog import Catalog
+from wikdict_gen_spark.operators import canonicalize
+from wikdict_gen_spark.pipeline import STAGES, run_pipeline
+
+
+def _same_rows(a, b):
+    cols = sorted(a.columns)
+    a, b = a.select(cols), b.select(cols)
+    return a.count() == b.count() and a.exceptAll(b).isEmpty()
+
+
+@pytest.fixture(scope="module")
+def checkpointed(spark, fixture_dir, tmp_path_factory):
+    work = tmp_path_factory.mktemp("runner_ckpt")
+    return str(work), run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work))
+
+
+def test_fused_cc_stages_match_checkpointed(spark, fixture_dir, checkpointed,
+                                            tmp_path_factory):
+    """canonical and kg_nodes come from the CC worker thread in fused mode."""
+    _, ckpt = checkpointed
+    work = tmp_path_factory.mktemp("runner_fused")
+    fused = run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work), fused=True)
+    for name in ["alias_edges", "canonical", "kg_nodes"]:
+        assert _same_rows(fused[name], ckpt[name]), name
+    spark.catalog.clearCache()
+
+
+def test_cc_failure_surfaces_as_chained_error(spark, fixture_dir, tmp_path_factory,
+                                              monkeypatch):
+    calls = []
+
+    def broken(edges):
+        calls.append(edges)
+        raise OSError(f"executor lost #{len(calls)}")
+
+    monkeypatch.setattr(canonicalize, "connected_components", broken)
+    work = tmp_path_factory.mktemp("runner_cc_fail")
+    out = run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work), fused=True)
+    with pytest.raises(RuntimeError, match="executor lost #1") as err:
+        out["canonical"]
+    # the worker thread's attempt, then the one synchronous retry
+    assert len(calls) == 2
+    assert isinstance(err.value.__cause__, OSError)
+    assert "executor lost #2" in str(err.value.__cause__)
+    spark.catalog.clearCache()
+
+
+def test_unknown_stop_after_rejected_before_spark(tmp_path):
+    work = tmp_path / "never_created"
+    # spark=None: the check must fire before the session is touched
+    with pytest.raises(ValueError, match="all_tran") as err:
+        run_pipeline(None, str(tmp_path / "pages.parquet"), str(work), stop_after="all_tran")
+    assert "all_trans" in str(err.value) and "kg_nodes" in str(err.value)
+    assert not work.exists()
+
+
+def test_metrics_total_rows_match_committed_tables(spark, checkpointed):
+    workdir, _ = checkpointed
+    cat = Catalog(spark, workdir)
+    metrics = cat.metrics()
+    assert set(metrics) == {name for name, _, _ in STAGES}
+    for name, m in metrics.items():
+        assert m["table"] == name
+        assert m["total_rows"] == cat.read(name).count(), name

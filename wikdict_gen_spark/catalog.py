@@ -8,8 +8,9 @@ completion, atomic rename to `<name>`, then write the `_COMMITTED` marker.
 A stage interrupted mid-write leaves only a tmp directory and is re-run on
 resume; a committed stage is never recomputed (north_rule resumability).
 
-Every commit also appends per-partition lineage/metric rows to the
-`_metrics` table: (table, partition_id, rows, committed_seq).
+Every commit also writes `_metrics/<table>.json`: the table name, the
+write's wall_s, and total_rows, n_partitions and per-file row counts
+(`partitions`) read from the parquet footers; `metrics()` reads them back.
 """
 
 from __future__ import annotations
@@ -69,10 +70,6 @@ class Catalog:
         if self.exists(name):
             return self.read(name)
         return self.write(build(), name, partition_by)
-
-    def invalidate(self, name: str) -> None:
-        if self.path(name).exists():
-            shutil.rmtree(self.path(name))
 
     # -- lineage / metrics ------------------------------------------------------
     def _record_metrics(self, name: str, wall_s: float) -> None:

@@ -11,8 +11,8 @@ file" input-skew case of the optimization playbook: the fix is one
 widening shuffle immediately after the read, paid ONLY when the layout is
 actually under-parallel.
 
-``widen_if_narrow`` is that guard (the same discipline as the pipeline's
-pages-scan guard, wikdict_gen_spark/pipeline.py): if the input's physical
+``widen_if_narrow`` is that guard (the KG pipeline's pages scan goes
+through it too, wikdict_gen_spark/pipeline.py): if the input's physical
 partition count is below the cluster's core count, round-robin
 repartition to ``factor``× cores; otherwise return the input untouched.
 A normally-laid-out corpus (many files / row groups — any real crawl at

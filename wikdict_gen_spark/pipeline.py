@@ -11,24 +11,23 @@ Stage DAG (each stage = one committed snapshot, resumable via Catalog):
                                                           │        │
                                                  kg_nodes ┴─ kg_edges
 
-Kill the driver after any stage and re-run: committed stages are read
-back, nothing is recomputed, and the final snapshot is identical (tested).
+`STAGES` lists the DAG in topological order; `run_pipeline` walks it in
+one loop.  Kill the driver after any stage and re-run: committed stages
+are read back, nothing is recomputed, the final snapshot is identical.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 from wikdict_gen_spark.catalog import Catalog
-
-# memory+disk, serialized (PySpark exposes no _SER constant)
-_CKPT_LEVEL = StorageLevel(True, True, False, False, 1)
 from wikdict_gen_spark.operators import canonicalize, generic, infer, materialize, process
 from wikdict_gen_spark.operators.extract import extract_text, parse_records, records
-
-RAW_TABLES = ["entry", "pos", "gender", "pronun", "form", "translation", "nym"]
+from wikdict_gen_spark.operators.partitioning import widen_if_narrow
 
 # Stages referenced by 2+ downstream consumers.  In fused mode these are
 # the ONLY lineage-cut points: a re-referenced stage must be checkpointed
@@ -55,271 +54,143 @@ FANOUT_STAGES = frozenset({
     "infer",              # infer_grouped, simple_translation, kg_edges
 })
 
+# memory+disk, serialized (PySpark exposes no _SER constant): checkpointed
+# stages are re-scanned by several consumers, and deserialized row objects
+# make those scans GC-bound (measured ~6% pipeline wall at 4 cores)
+_CKPT_LEVEL = StorageLevel(True, True, False, False, 1)
 
-class LazyStages(dict):
-    """Stage dict whose entries can resolve on first access.
 
-    Used by fused mode to keep the CC side thread running underneath the
-    terminal kg_edges write: 'canonical'/'kg_nodes' join the thread only
-    when a caller actually reads them.
+def _kg_edges(s: dict) -> DataFrame:
+    return materialize.translation_edges(s["infer"]).unionByName(
+        materialize.structural_edges(s["entry"], s["raw_pronun"], s["form"], s["raw_nym"]))
 
-    Keeps dict invariants for consumers that iterate: keys()/items()/
-    values()/len() include unresolved thunk names (items()/values()
-    resolve on iteration), so snapshotting `dict(stages)` or validating
-    every stage sees the lazy entries too.
+
+# (name, build, partition_by) in topological order.  build(s) reads its
+# inputs from the stages built so far; `records` is followed by the seven
+# raw_* tables, lazy filters of it (a filter of a committed snapshot costs
+# nothing to re-derive, so committing each one would only add latency).
+STAGES = [
+    ("extracted", lambda s: extract_text(s["pages"]), None),
+    ("records", lambda s: records(s["extracted"]), None),
+    ("entry", lambda s: process.make_entry(
+        s["raw_entry"], s["raw_pos"], s["raw_gender"], s["raw_pronun"]), None),
+    ("form", lambda s: process.make_form(s["raw_form"]), None),
+    ("translation_clean", lambda s: process.clean_translations(s["raw_translation"]), None),
+    ("importance", lambda s: process.make_importance(
+        s["entry"], s["translation_clean"], s["raw_nym"]), None),
+    ("translation_base", lambda s: process.make_translation_base(
+        s["translation_clean"], s["entry"], s["importance"]), None),
+    ("translation", lambda s: process.make_translation(
+        s["translation_base"], s["importance"], audit=False), None),
+    ("all_trans", lambda s: process.make_all_trans(s["translation"]), None),
+    ("backlink", lambda s: infer.backlink_score(s["all_trans"]), None),
+    ("indirect", lambda s: infer.indirect(s["all_trans"], s["backlink"]), None),
+    ("infer", lambda s: infer.fuse_evidence(s["all_trans"], s["backlink"], s["indirect"]), None),
+    ("infer_grouped", lambda s: infer.group_inferred(s["infer"]), None),
+    ("translation_graded", lambda s: generic.grade_translations(s["infer_grouped"]), None),
+    ("translation_grouped", lambda s: generic.group_translations(s["translation_graded"]), None),
+    ("simple_translation", lambda s: generic.simple_translations(
+        s["infer"], s["importance"]), None),
+    ("alias_edges", lambda s: canonicalize.alias_edges(s["entry"], s["raw_nym"]), None),
+    ("canonical", lambda s: canonicalize.connected_components(s["alias_edges"]), None),
+    ("kg_edges", _kg_edges, ["from_lang"]),
+    ("kg_nodes", lambda s: materialize.build_nodes(s["entry"], s["importance"], s["canonical"]),
+     ["lang"]),
+]
+_BUILDS = {name: build for name, build, _ in STAGES}
+
+
+class _Stages(dict):
+    """The returned stage dict; a `pending` zero-arg build runs on first read."""
+
+    def __init__(self, **stages: DataFrame) -> None:
+        super().__init__(**stages)
+        self.pending: dict = {}
+
+    def __missing__(self, name: str) -> DataFrame:
+        self[name] = df = self.pending[name]()
+        del self.pending[name]
+        return df
+
+
+def _overlap_cc(out: _Stages) -> None:
+    """Fused mode: run connected components on a worker thread from here on.
+
+    CC is an eager driver-side loop of ~75 tiny jobs that only kg_nodes
+    consumes; on its own thread they fill idle task slots under the
+    translation chain and the terminal kg_edges write instead of running
+    in front of them (4 interleaved kg_build pairs at 4 vCPU: work_s median
+    44.8 s overlapped vs 50.5 s synchronous).  `entry` is materialized first
+    so the threads never race to compute one checkpoint twice.
     """
+    out["entry"].count()
+    out["alias_edges"] = _BUILDS["alias_edges"](out)
+    pool = ThreadPoolExecutor(1, thread_name_prefix="cc-loop")
+    cc = pool.submit(_BUILDS["canonical"], out)
+    pool.shutdown(wait=False)
 
-    def __init__(self) -> None:
-        super().__init__()
-        self._thunks: dict[str, object] = {}
+    def canonical() -> DataFrame:
+        try:
+            return cc.result()
+        except Exception as first:
+            # one synchronous retry, with the original failure chained for
+            # the log: a transient executor hiccup shouldn't sink the whole
+            # fused run at its last read
+            try:
+                return _BUILDS["canonical"](out)
+            except Exception as exc:
+                raise RuntimeError(
+                    "connected_components failed on the CC worker thread "
+                    f"(original: {first!r}) and on synchronous retry"
+                ) from exc
 
-    def lazy(self, name: str, thunk) -> None:
-        self._thunks[name] = thunk
-
-    def _resolve(self, key: str) -> None:
-        if not super().__contains__(key) and key in self._thunks:
-            self[key] = self._thunks.pop(key)()
-
-    def __getitem__(self, key):
-        self._resolve(key)
-        return super().__getitem__(key)
-
-    def get(self, key, default=None):
-        self._resolve(key)
-        return super().get(key, default)
-
-    def __contains__(self, key) -> bool:
-        return super().__contains__(key) or key in self._thunks
-
-    def __len__(self) -> int:
-        return super().__len__() + len(self._thunks)
-
-    def __iter__(self):
-        yield from super().__iter__()
-        yield from list(self._thunks)
-
-    def keys(self):
-        return list(self)
-
-    def items(self):
-        return [(k, self[k]) for k in list(self)]
-
-    def values(self):
-        return [self[k] for k in list(self)]
+    out.pending["canonical"] = canonical
+    out.pending["kg_nodes"] = partial(_BUILDS["kg_nodes"], out)
 
 
-def run_pipeline(
-    spark: SparkSession,
-    pages_path: str,
-    workdir: str,
-    stop_after: str | None = None,
-    fused: bool = False,
-) -> dict[str, DataFrame]:
+def run_pipeline(spark: SparkSession, pages_path: str, workdir: str,
+                 stop_after: str | None = None, fused: bool = False) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline; returns all stage DataFrames.
 
-    stop_after: name of the last stage to commit (for resume testing).
+    stop_after: name of the last stage to commit (for resume testing);
+    an unknown name raises ValueError before any Spark job runs.
 
     fused=True replaces per-stage snapshot commits with lazy local
-    checkpoints: shared stages materialize once on first use and the only
-    durable writes are the terminal actions.  This is the max-throughput
-    shape (what a cluster job with only terminal Iceberg writes looks
-    like); the default checkpointed mode is the resumable production shape.
+    checkpoints of FANOUT_STAGES: shared stages materialize once on first
+    use and the only durable writes are the caller's terminal actions.
+    This is the max-throughput shape (a cluster job with only terminal
+    Iceberg writes); the default checkpointed mode is the resumable one.
 
     Why localCheckpoint and not persist(): logical plans are trees, not
     DAGs — every re-reference of a cached stage clones its entire analyzed
     subtree, so 20 composed stages blow the plan up exponentially (measured
-    >200k plan nodes at the fuse stage; driver analysis time then dwarfs
-    execution).  localCheckpoint truncates the *logical* lineage to a
-    LogicalRDD while the underlying RDD graph still shares each stage's
-    computation; eager=False keeps stages lazy until first use.  The cost
-    is fused-mode fault-tolerance (lost executors can't recompute a local
-    checkpoint) — acceptable by construction: fused mode IS the
-    no-resume shape, checkpointed mode is the durable one.
+    >200k plan nodes at the fuse stage).  localCheckpoint truncates the
+    *logical* lineage to a LogicalRDD while the RDD graph still shares each
+    stage's computation; eager=False keeps stages lazy until first use.
+    The cost is fused-mode fault-tolerance (a lost executor can't recompute
+    a local checkpoint) — acceptable: fused mode IS the no-resume shape.
     """
+    if stop_after is not None and stop_after not in _BUILDS:
+        raise ValueError(
+            f"unknown stop_after {stop_after!r}; valid stages: {', '.join(_BUILDS)}")
     cat = Catalog(spark, workdir)
-    out: LazyStages = LazyStages()
-    done = [False]
-    # bind the mode once: stage() must not read `fused` through the closure,
-    # a later local rebind would silently flip every subsequent stage to the
-    # uncommitted path (DataFrames have no __bool__, so they are truthy)
-    fused_mode = bool(fused)
-
-    def stage(name: str, build, partition_by: list[str] | None = None) -> DataFrame:
-        if done[0]:
-            return None  # type: ignore[return-value]
-        if fused_mode:
-            df = build()
+    out = _Stages(pages=widen_if_narrow(spark.read.parquet(pages_path)))
+    for name, build, partition_by in STAGES:
+        if name in out or name in out.pending:
+            continue  # bound early by _overlap_cc
+        if fused:
+            df = build(out)
             if name in FANOUT_STAGES:
-                # serialized blocks: checkpointed stages are re-scanned by
-                # several consumers, and deserialized row objects make those
-                # scans GC-bound (measured ~6% pipeline wall at 4 cores)
                 df = df.localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL)
+            out[name] = df
         else:
-            df = cat.ensure(name, build, partition_by)
-        out[name] = df
-        if stop_after == name:
-            done[0] = True
-        return df
-
-    cores = spark.sparkContext.defaultParallelism
-    pages = spark.read.parquet(pages_path)
-    # a pathological corpus layout (one unsplittable row group) would leave
-    # the extraction UDFs under-parallel; only then is a widening shuffle
-    # of the raw html worth paying.  A normally-laid-out corpus (many
-    # files / small row groups — a real crawl) already scans at >= cores
-    # partitions and skips this: the repartition moves every html byte
-    # through one full exchange, measured ~20% of pipeline wall when it
-    # fired on an already-parallel scan.
-    # cheap file-count short-circuit first: >= cores files can never be
-    # under-parallel — but only under the default file-split configs
-    # (FileScan bin-packs many files into fewer splits when
-    # maxPartitionBytes/openCostInBytes are raised, so the file count
-    # stops bounding the split count); with non-default configs the rdd
-    # partition probe stays the authority
-    def _default_split_conf() -> bool:
-        get = spark.conf.get
-        return (
-            get("spark.sql.files.maxPartitionBytes", "134217728b").rstrip("b")
-            == "134217728"
-            and get("spark.sql.files.openCostInBytes", "4194304b").rstrip("b")
-            == "4194304"
-        )
-
-    if (
-        len(pages.inputFiles()) < cores or not _default_split_conf()
-    ) and pages.rdd.getNumPartitions() < cores:
-        pages = pages.repartition(cores * 2)
-    extracted = stage("extracted", lambda: extract_text(pages))
-    if done[0]:
-        return out
-
-    # explode page bodies into record lines exactly once; the seven raw
-    # tables are lazy filters of this committed snapshot (a filter of
-    # committed parquet costs nothing to re-derive — committing each one
-    # separately only adds serial snapshot latency)
-    recs = stage("records", lambda: records(extracted))
-    if done[0]:
-        return out
-    raws = parse_records(extracted, recs)
-    out.update({f"raw_{t}": raws[t] for t in RAW_TABLES})
-    entry = stage("entry", lambda: process.make_entry(
-        raws["entry"], raws["pos"], raws["gender"], raws["pronun"]))
-    if done[0]:
-        return out
-
-    # Fused mode: start the canonicalization loop (alias edges + iterative
-    # CC — an eager driver-side loop only kg_nodes consumes) on a side
-    # thread as soon as its inputs exist.  Its small jobs interleave with
-    # the translation chain's materialization on idle task slots instead
-    # of serializing in front of the terminal writes.  The shared prefix
-    # (records/entry checkpoints) is forced first so the two threads never
-    # race to compute the same un-materialized checkpoint twice.
-    cc_thread = None
-    cc_box: dict[str, DataFrame] = {}
-    if fused_mode and stop_after is None:
-        import threading
-
-        entry.count()
-        aliases_early = canonicalize.alias_edges(entry, raws["nym"])
-
-        def _cc() -> None:
-            # capture failures: a raise in the side thread must surface at
-            # the consumer's read, not vanish into a KeyError('df') after a
-            # silent join()
-            try:
-                cc_box["df"] = canonicalize.connected_components(aliases_early)
-            except BaseException as exc:  # noqa: BLE001 — re-raised at read
-                cc_box["err"] = exc
-
-        cc_thread = threading.Thread(target=_cc, name="cc-loop", daemon=True)
-        cc_thread.start()
-    form = stage("form", lambda: process.make_form(raws["form"]))
-    if done[0]:
-        return out
-    translation_clean = stage("translation_clean", lambda: process.clean_translations(
-        raws["translation"]))
-    if done[0]:
-        return out
-    importance = stage("importance", lambda: process.make_importance(
-        entry, translation_clean, raws["nym"]))
-    if done[0]:
-        return out
-    translation_base = stage("translation_base", lambda: process.make_translation_base(
-        translation_clean, entry, importance))
-    if done[0]:
-        return out
-    translation = stage("translation", lambda: process.make_translation(
-        translation_base, importance, audit=False))
-    if done[0]:
-        return out
-    all_trans = stage("all_trans", lambda: process.make_all_trans(translation))
-    if done[0]:
-        return out
-
-    backlink = stage("backlink", lambda: infer.backlink_score(all_trans))
-    if done[0]:
-        return out
-    indirect_df = stage("indirect", lambda: infer.indirect(all_trans, backlink))
-    if done[0]:
-        return out
-    fused_df = stage("infer", lambda: infer.fuse_evidence(all_trans, backlink, indirect_df))
-    if done[0]:
-        return out
-    grouped = stage("infer_grouped", lambda: infer.group_inferred(fused_df))
-    if done[0]:
-        return out
-    graded = stage("translation_graded", lambda: generic.grade_translations(grouped))
-    if done[0]:
-        return out
-    stage("translation_grouped", lambda: generic.group_translations(graded))
-    if done[0]:
-        return out
-    stage("simple_translation", lambda: generic.simple_translations(fused_df, importance))
-    if done[0]:
-        return out
-
-    if cc_thread is not None:
-        # resolve-on-read: the CC thread keeps running underneath the
-        # terminal kg_edges job; callers that read canonical/kg_nodes pay
-        # the join only then (by which time CC has normally finished)
-        out["alias_edges"] = aliases_early
-
-        def _canonical() -> DataFrame:
-            cc_thread.join()
-            if "err" in cc_box:
-                # fall back to a synchronous recompute once, with the
-                # original failure chained for the log; a transient executor
-                # hiccup shouldn't sink the whole fused run at its last read
-                try:
-                    return canonicalize.connected_components(aliases_early)
-                except BaseException as exc:
-                    raise RuntimeError(
-                        "connected_components failed on the CC side thread "
-                        f"(original: {cc_box['err']!r}) and on synchronous retry"
-                    ) from exc
-            return cc_box["df"]
-
-        out.lazy("canonical", _canonical)
-        out.lazy(
-            "kg_nodes",
-            lambda: materialize.build_nodes(entry, importance, out["canonical"]),
-        )
-        stage("kg_edges", lambda: materialize.translation_edges(fused_df).unionByName(
-            materialize.structural_edges(entry, raws["pronun"], form, raws["nym"])),
-            ["from_lang"])
-        return out
-
-    aliases = stage("alias_edges", lambda: canonicalize.alias_edges(entry, raws["nym"]))
-    if done[0]:
-        return out
-    canonical = stage("canonical", lambda: canonicalize.connected_components(aliases))
-    if done[0]:
-        return out
-
-    stage("kg_edges", lambda: materialize.translation_edges(fused_df).unionByName(
-        materialize.structural_edges(entry, raws["pronun"], form, raws["nym"])),
-        ["from_lang"])
-    if done[0]:
-        return out
-    stage("kg_nodes", lambda: materialize.build_nodes(entry, importance, canonical), ["lang"])
+            out[name] = cat.ensure(name, partial(build, out), partition_by)
+        if name == "records":
+            raws = parse_records(out["extracted"], out["records"])
+            out.update((f"raw_{t}", df) for t, df in raws.items())
+        if name == "entry" and fused and stop_after is None:
+            _overlap_cc(out)
+        if name == stop_after:
+            break
+    del out["pages"]
     return out
