@@ -1,8 +1,25 @@
-"""Extraction-stage tests: byte-identical text + structure detection parity."""
+"""Extraction-stage tests: pages schema check, byte-identical text and
+structure detection parity."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from wikdict_gen_spark.operators.extract import extract_text, parse_records
+from wikdict_gen_spark.operators.extract import extract_text, parse_records, read_pages
+
+
+def test_read_pages_validates(spark, fixture_dir):
+    df = read_pages(spark, f"{fixture_dir}/pages.parquet")
+    assert df.columns == ["url", "warc_ts", "html", "text", "lang"]
+
+
+def test_read_pages_rejects_bad_schema(spark, fixture_dir, tmp_path):
+    spark.range(3).write.parquet(str(tmp_path / "bad"))
+    with pytest.raises(ValueError, match="missing columns"):
+        read_pages(spark, str(tmp_path / "bad"))
+    pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
+    pages.withColumn("html", F.col("text")).write.parquet(str(tmp_path / "str_html"))
+    with pytest.raises(ValueError, match="'html': expected binary, got string"):
+        read_pages(spark, str(tmp_path / "str_html"))
 
 
 def test_extract_byte_identity(spark, fixture_dir):

@@ -1,6 +1,6 @@
 """Stage-table runner (wikdict_gen_spark/pipeline.py): the fused mode's
-connected-components worker thread, stop_after validation, and the
-per-table `_metrics` the checkpointed mode records."""
+connected-components worker thread, stop_after and pages-schema
+validation, and the per-table `_metrics` the checkpointed mode records."""
 
 import pytest
 
@@ -58,6 +58,17 @@ def test_unknown_stop_after_rejected_before_spark(tmp_path):
     with pytest.raises(ValueError, match="all_tran") as err:
         run_pipeline(None, str(tmp_path / "pages.parquet"), str(work), stop_after="all_tran")
     assert "all_trans" in str(err.value) and "kg_nodes" in str(err.value)
+    assert not work.exists()
+
+
+def test_bad_pages_schema_rejected_before_workdir(spark, fixture_dir, tmp_path):
+    """A corpus without `html` fails at the pages read, not inside the
+    extract UDF, and leaves no workdir behind."""
+    bad = str(tmp_path / "no_html")
+    spark.read.parquet(f"{fixture_dir}/pages.parquet").drop("html").write.parquet(bad)
+    work = tmp_path / "never_created"
+    with pytest.raises(ValueError, match=r"missing columns: \['html'\]"):
+        run_pipeline(spark, bad, str(work))
     assert not work.exists()
 
 

@@ -1,4 +1,5 @@
-"""Streaming windowed aggregation (watermark/late-data) + stateful dedup."""
+"""Streaming windowed aggregation: watermark/late-data drop and
+batching-invariant complete output of windowed_event_stats."""
 
 import datetime
 import os
@@ -6,229 +7,88 @@ import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 
-from wikdict_gen_spark import schemas
-from wikdict_gen_spark.streaming.windows import (
-    streaming_exact_dedup,
-    windowed_page_stats,
-)
+from wikdict_gen_spark.streaming.windows import windowed_event_stats
 
 T0 = datetime.datetime(2026, 1, 1, 10, 0, 0)
+EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
+                 "event_type string, value double")
 
 
-def _pages_table(rows):
-    """rows: (url, ts_offset_minutes, text, lang)."""
+def _events_table(rows):
+    """rows: (event_id, ts_offset_minutes, user_id, event_type, value)."""
     return pa.table(
         {
-            "url": pa.array([r[0] for r in rows], pa.string()),
-            "warc_ts": pa.array(
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array(
                 [T0 + datetime.timedelta(minutes=r[1]) for r in rows],
                 pa.timestamp("us", tz="UTC"),
             ),
-            "html": pa.array([r[2].encode() for r in rows], pa.binary()),
-            "text": pa.array([r[2] for r in rows], pa.string()),
-            "lang": pa.array([r[3] for r in rows], pa.string()),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": pa.array([r[3] for r in rows], pa.string()),
+            "value": pa.array([r[4] for r in rows], pa.float64()),
         }
     )
-
-
-def _run_stream(spark, src, build, sink_name, extra_reader=None):
-    reader = spark.readStream.schema(schemas.PAGES).option(
-        "maxFilesPerTrigger", "1"
-    )
-    stream = reader.parquet(str(src))
-    out = build(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {sink_name}")
 
 
 def test_windowed_stats_and_late_drop(spark, tmp_path):
     src = tmp_path / "landing"
     src.mkdir()
-    # batch 1: pages at 10:05 and 11:10 -> stream max event time 11:10,
+    # batch 1: events at 10:05 and 11:10 -> stream max event time 11:10,
     # watermark (1h delay) = 10:10
     pq.write_table(
-        _pages_table(
+        _events_table(
             [
-                ("u1", 5, "a", "de"),
-                ("u2", 5, "b", "de"),
-                ("u3", 70, "c", "en"),
+                (1, 5, 100, "click", 1.0),
+                (2, 5, 101, "click", 2.0),
+                (3, 70, 102, "view", 3.0),
             ]
         ),
         src / "b1.parquet",
     )
-    # batch 2: an on-time page (11:20) -> max event time 11:20
-    pq.write_table(_pages_table([("u4", 80, "d", "en")]), src / "b2.parquet")
-    # batch 3: a LATE page (8:30), far behind the operative watermark
+    # batch 2: an on-time event (11:20) -> max event time 11:20
+    pq.write_table(_events_table([(4, 80, 103, "view", 4.0)]), src / "b2.parquet")
+    # batch 3: a LATE event (8:30), far behind the operative watermark
     # (the watermark lags one micro-batch: stats from batch N set the
     # watermark enforced from batch N+1 on, so the drop is only
     # guaranteed once a batch boundary has passed since 11:10 was seen)
-    pq.write_table(_pages_table([("u_late", -90, "e", "de")]), src / "b3.parquet")
+    pq.write_table(_events_table([(5, -90, 104, "click", 5.0)]), src / "b3.parquet")
     # the file source orders batches by modification time: pin them
     now = time.time()
     for i, f in enumerate(["b1", "b2", "b3"]):
         os.utime(src / f"{f}.parquet", (now - 100 + i * 10, now - 100 + i * 10))
 
-    got = _run_stream(
-        spark, src,
-        lambda s: windowed_page_stats(s, window="1 hour", watermark="1 hour"),
-        "win_stats",
-    )
-    # update mode emits one row per (window, lang) per batch; keep the last
-    rows = {}
-    for r in got.collect():
-        rows[(r["window_start"].hour, r["lang"])] = r["n_pages"]
-    assert rows[(10, "de")] == 2          # u1, u2
-    assert rows[(11, "en")] == 2          # u3, u4 (cross-batch window update)
-    # the 8:30 late row never produced an (8, 'de') window
-    assert (8, "de") not in rows
-
-
-def test_streaming_exact_dedup_cross_batch(spark, tmp_path):
-    src = tmp_path / "landing2"
-    src.mkdir()
-    # batch 1: two urls with identical content + one unique
-    pq.write_table(
-        _pages_table(
-            [
-                ("u_b", 1, "same  content", "de"),
-                ("u_a", 2, "same content", "de"),   # ws-normalized dup of u_b
-                ("u_x", 3, "unique", "en"),
-            ]
-        ),
-        src / "b1.parquet",
-    )
-    time.sleep(1.1)
-    # batch 2: the same content arrives AGAIN -> state must remember it
-    pq.write_table(
-        _pages_table([("u_c", 10, "same content", "de")]), src / "b2.parquet"
-    )
-    os.utime(src / "b2.parquet")
-
-    # timeout_ms=None: availableNow replays must not arm the TTL clock (a
-    # pending processing-time timer keeps availableNow scheduling batches
-    # forever — see streaming_exact_dedup's docstring)
-    got = _run_stream(
-        spark, src, lambda s: streaming_exact_dedup(s, timeout_ms=None),
-        "dedup_stream",
-    )
-    rows = got.collect()
-    by_hash = {}
-    for r in rows:
-        by_hash.setdefault(r["content_hash"], []).append(r)
-    assert len(by_hash) == 2  # two distinct contents
-    dup_rows = next(v for v in by_hash.values() if len(v) == 2)
-    # canonical url chosen in batch 1 (lexically smallest) and STABLE in
-    # batch 2 even though only u_c arrived there
-    assert {r["url"] for r in dup_rows} == {"u_a"}
-    assert sorted(r["n_dups_total"] for r in dup_rows) == [2, 3]
-    # first_ts is the CANONICAL row's timestamp, held in state: batch 2's
-    # emission (triggered by u_c at +10min) still reports u_a's +2min
-    assert {r["first_ts"].replace(tzinfo=None) for r in dup_rows} == {
-        T0 + datetime.timedelta(minutes=2)
-    }
-    uniq_rows = next(v for v in by_hash.values() if len(v) == 1)
-    assert uniq_rows[0]["url"] == "u_x" and uniq_rows[0]["n_dups_total"] == 1
-
-
-def test_streaming_dedup_state_ttl(spark, tmp_path):
-    """A key silent past the processing-time timeout is evicted: its state
-    times out in a later trigger that carries no rows for it, and a
-    subsequent arrival of the same content restarts as canonical
-    (n_dups_total back to 1, new canonical url and first_ts).
-
-    A live processingTime trigger drives the wall clock (processing-time
-    timeouts never fire under availableNow — the pending timer keeps that
-    trigger scheduling batches forever, so TTL'd queries must run with a
-    real trigger; see streaming_exact_dedup's docstring)."""
-    src = tmp_path / "landing_ttl"
-    src.mkdir()
     stream = (
-        spark.readStream.schema(schemas.PAGES)
+        spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
     )
     q = (
-        streaming_exact_dedup(stream, timeout_ms=2000)
+        windowed_event_stats(stream, window="1 hour", watermark="1 hour")
         .writeStream.format("memory")
-        .queryName("dedup_ttl")
+        .queryName("win_stats")
         .outputMode("update")
-        .trigger(processingTime="300 milliseconds")
+        .trigger(availableNow=True)
         .start()
     )
-
-    def wait_for(pred, desc, deadline=90):
-        t0 = time.time()
-        while time.time() - t0 < deadline:
-            rows = spark.sql("SELECT * FROM dedup_ttl").collect()
-            if pred(rows):
-                return rows
-            time.sleep(0.3)
-        raise AssertionError(f"timed out waiting for {desc}")
-
-    try:
-        # b1: the key arrives once via u_a
-        pq.write_table(
-            _pages_table([("u_a", 1, "ttl content", "de")]), src / "b1.parquet"
-        )
-        rows = wait_for(lambda rs: any(r["url"] == "u_a" for r in rs), "u_a")
-        assert [r["n_dups_total"] for r in rows if r["url"] == "u_a"] == [1]
-
-        time.sleep(3)  # > the 2s timeout while the key sees no traffic
-
-        # b2 (unrelated key) guarantees a data-bearing trigger after the
-        # deadline: the idle key's hasTimedOut call drops its state there
-        pq.write_table(
-            _pages_table([("u_other", 2, "different", "en")]), src / "b2.parquet"
-        )
-        wait_for(lambda rs: any(r["url"] == "u_other" for r in rs), "u_other")
-
-        # b3: the original content re-arrives via u_z -> fresh state
-        pq.write_table(
-            _pages_table([("u_z", 3, "ttl content", "de")]), src / "b3.parquet"
-        )
-        rows = wait_for(lambda rs: any(r["url"] == "u_z" for r in rs), "u_z")
-    finally:
-        q.stop()
-    revived = [r for r in rows if r["url"] == "u_z"]
-    # state was dropped: the counter restarted and the canonical moved
-    assert revived[0]["n_dups_total"] == 1
-    assert revived[0]["first_ts"].replace(tzinfo=None) == T0 + datetime.timedelta(
-        minutes=3
-    )
+    q.awaitTermination()
+    # update mode emits one row per (window, type) per batch; keep the last
+    rows = {}
+    for r in spark.sql("SELECT * FROM win_stats").collect():
+        rows[(r["window_start"].hour, r["event_type"])] = (
+            r["n_events"], r["min_user"], r["max_user"])
+    assert rows[(10, "click")] == (2, 100, 101)
+    # 3 and 4 (cross-batch window update)
+    assert rows[(11, "view")] == (2, 102, 103)
+    # the 8:30 late event never produced an (8, 'click') window
+    assert (8, "click") not in rows
 
 
 def test_windowed_event_stats_complete_mode_out_of_order(spark, tmp_path):
-    """The oracle-portable twin (q_stream_event_windows' operator): a
-    multi-batch OUT-OF-ORDER replay in complete output mode must equal
+    """q_stream_event_windows' operator: a multi-batch OUT-OF-ORDER replay in complete output mode must equal
     the batch groupBy regardless of micro-batch boundaries."""
-    from wikdict_gen_spark.streaming.windows import windowed_event_stats
-
     src = tmp_path / "events_landing"
     src.mkdir()
-
-    def _events_table(rows):
-        """rows: (event_id, ts_offset_minutes, user_id, event_type, value)."""
-        return pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array(
-                    [T0 + datetime.timedelta(minutes=r[1]) for r in rows],
-                    pa.timestamp("us", tz="UTC"),
-                ),
-                "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                "event_type": pa.array([r[3] for r in rows], pa.string()),
-                "value": pa.array([r[4] for r in rows], pa.float64()),
-            }
-        )
 
     # batch 1 reaches 11:10; batch 2 goes BACK to 10:20 (out of order);
     # batch 3 is >2h late relative to the stream's max event time
@@ -243,10 +103,8 @@ def test_windowed_event_stats_complete_mode_out_of_order(spark, tmp_path):
         pq.write_table(_events_table(b), src / f"b{i}.parquet")
         os.utime(src / f"b{i}.parquet", (now - 100 + i * 10,) * 2)
 
-    sch = ("event_id long, ts timestamp, user_id long, "
-           "event_type string, value double")
     stream = (
-        spark.readStream.schema(sch)
+        spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
     )
@@ -274,113 +132,3 @@ def test_windowed_event_stats_complete_mode_out_of_order(spark, tmp_path):
             n + 1, min(lo, uid), max(hi, uid), min(vlo, val), max(vhi, val)
         )
     assert got == expect
-
-
-def test_streaming_session_window(spark, tmp_path):
-    """session_stats_stream emits one closed session per (user, burst):
-    two bursts split by a gap longer than the threshold, fed as separate
-    micro-batches; append mode emits each session once the watermark
-    passes its end."""
-    from wikdict_gen_spark.streaming.windows import session_stats_stream
-
-    src = tmp_path / "ev_landing"
-    src.mkdir()
-
-    def _events_table(rows):
-        # rows: (event_id, user_id, ts_offset_minutes)
-        return pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "user_id": pa.array([r[1] for r in rows], pa.int64()),
-                "ts": pa.array(
-                    [T0 + datetime.timedelta(minutes=r[2]) for r in rows],
-                    pa.timestamp("us", tz="UTC"),
-                ),
-            }
-        )
-
-    # burst 1 (3 events in 10 min), burst 2 ninety minutes later, plus a
-    # watermark-advancing sentinel far in the future so both sessions close
-    pq.write_table(
-        _events_table([(1, 7, 0), (2, 7, 5), (3, 7, 10), (4, 8, 0)]),
-        src / "b1.parquet",
-    )
-    pq.write_table(
-        _events_table([(5, 7, 100), (6, 9, 100_000)]), src / "b2.parquet"
-    )
-
-    reader = spark.readStream.schema("event_id long, user_id long, ts timestamp")
-    stream = reader.option("maxFilesPerTrigger", "1").parquet(str(src))
-    out = session_stats_stream(stream, gap="30 minutes", watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql(
-        "SELECT * FROM sessions_sink ORDER BY user_id, session_start"
-    ).collect()
-    by_key = {(r["user_id"], r["session_start"].minute): r for r in rows}
-    # user 7 burst 1: 3 events, end = last(+10min) + 30min gap
-    b1 = by_key[(7, 0)]
-    assert b1["n_events"] == 3
-    assert (b1["session_end"] - b1["session_start"]).total_seconds() == 40 * 60
-    # user 7 burst 2 (90-min silence > 30-min gap): separate session
-    assert by_key[(7, 40)]["n_events"] == 1
-    assert by_key[(8, 0)]["n_events"] == 1
-
-
-def test_streaming_session_window_merges_on_late_event(spark, tmp_path):
-    """The reason session_stats_stream uses the BUILT-IN session_window:
-    a late event landing inside the watermark between two open sessions
-    must MERGE them into one — batch-arithmetic twins cannot express that
-    incrementally.  Two bursts 50 minutes apart (gap 30m) would close as
-    two sessions; a bridging event at minute 25 arrives in a later
-    micro-batch and welds them into a single 0..75min session."""
-    from wikdict_gen_spark.streaming.windows import session_stats_stream
-
-    src = tmp_path / "ev_merge"
-    src.mkdir()
-
-    def w(name, rows):
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "user_id": pa.array([r[1] for r in rows], pa.int64()),
-                    "ts": pa.array(
-                        [T0 + datetime.timedelta(minutes=r[2]) for r in rows],
-                        pa.timestamp("us", tz="UTC"),
-                    ),
-                }
-            ),
-            src / name,
-        )
-
-    # batch 1: two bursts, 50 min of silence between them (gap is 30 min)
-    w("b1.parquet", [(1, 7, 0), (2, 7, 50)])
-    # batch 2: the bridge at minute 25 (within watermark) + a far-future
-    # sentinel that pushes the watermark past everything so sessions close
-    w("b2.parquet", [(3, 7, 25), (4, 9, 100_000)])
-
-    reader = spark.readStream.schema("event_id long, user_id long, ts timestamp")
-    stream = reader.option("maxFilesPerTrigger", "1").parquet(str(src))
-    out = session_stats_stream(stream, gap="30 minutes", watermark="2 hours")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_merge_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql(
-        "SELECT * FROM sessions_merge_sink WHERE user_id = 7"
-    ).collect()
-    assert len(rows) == 1, [r.asDict() for r in rows]
-    r = rows[0]
-    assert r["n_events"] == 3
-    assert (r["session_end"] - r["session_start"]).total_seconds() == 80 * 60

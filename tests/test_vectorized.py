@@ -75,18 +75,6 @@ def test_sense_num_series_raises():
         vec.sense_num_series(pd.Series(["abc"], dtype="object"))
 
 
-def test_gloss_trailer_series():
-    vals = ["manger (1)", "manger|2", "manger:", "manger", None]
-    got = vec.strip_gloss_trailer_series(pd.Series(vals, dtype="object"))
-    want = [None if v is None else tc.strip_gloss_trailer(v) for v in vals]
-    assert [None if pd.isna(g) else g for g in got] == want
-
-
-def test_surface_guess_series():
-    got = vec.surface_guess_series(pd.Series(["deu/Haus", "eng/ice_cream"]))
-    assert list(got) == ["Haus", "ice cream"]
-
-
 def test_decode_utf8_series():
     got = vec.decode_utf8_series(
         pd.Series([b"ok", "caf\xe9".encode("latin-1"), None], dtype="object")

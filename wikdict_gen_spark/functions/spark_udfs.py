@@ -51,11 +51,6 @@ def clean_inflection_udf(s: pd.Series, lang: pd.Series) -> pd.Series:
 
 
 @pandas_udf(StringType())
-def strip_gloss_trailer_udf(s: pd.Series) -> pd.Series:
-    return vec.strip_gloss_trailer_series(s)
-
-
-@pandas_udf(StringType())
 def porter_stem_udf(s: pd.Series) -> pd.Series:
     """English search-token stemming (FTS4 tokenize=porter analog)."""
     from wikdict_gen_spark.functions.porter import stem_series

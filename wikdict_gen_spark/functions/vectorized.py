@@ -95,18 +95,6 @@ def parse_sense_series(s: pd.Series, lang_s: pd.Series) -> pd.Series:
     return s.mask(dummy, None)
 
 
-def strip_gloss_trailer_series(s: pd.Series) -> pd.Series:
-    """Vectorized strip_gloss_trailer (fr gloss `(1)` / `|2` / `:` tails)."""
-    na = s.isna()
-    out = s.str.extract(tc._RE_GLOSS_TRAILER, expand=True)[0]
-    return out.mask(na, None)
-
-
-def surface_guess_series(s: pd.Series) -> pd.Series:
-    """Vectorized surface_guess: drop 4-char lang prefix, '_' -> ' '."""
-    return s.str.slice(4).str.replace("_", " ", regex=False)
-
-
 def decode_utf8_series(b: pd.Series) -> pd.Series:
     """binary -> string with replacement-character repair for bad bytes."""
     return b.map(lambda x: None if x is None else bytes(x).decode("utf-8", "replace"))

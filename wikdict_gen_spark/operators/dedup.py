@@ -371,9 +371,9 @@ def embedding_near_dups(
     n_bands=1 is the single-AND-band round-3 behavior; raise it to buy
     recall at the advertised 0.9-cosine regime without cutting planes
     (which would trade precision instead).  Recall per (n_planes,
-    n_bands) is measured in NEARDUP_RECALL.json
-    (scripts/neardup_recall.py); every emitted pair is cosine-VERIFIED,
-    so banding only affects recall, never precision.
+    n_bands) was measured in NEARDUP_RECALL.json (a round-6 record);
+    every emitted pair is cosine-VERIFIED, so banding only affects
+    recall, never precision.
 
     method="exact": the full O(n^2) self-join — the verification/oracle
     path and the correct choice for small relations (e.g. per-partition
@@ -463,9 +463,8 @@ def incremental_dedup(
     text_col: str = "text",
 ) -> DataFrame:
     """Dedup an arriving batch against an already-committed corpus: the
-    shape every resumable ingest pipeline runs (the batch twin of
-    streaming_exact_dedup, and the reason exact_dedup's hash table is
-    worth persisting between snapshots).
+    shape every resumable ingest pipeline runs (and the reason
+    exact_dedup's hash table is worth persisting between snapshots).
 
     `seen_hashes` is the committed corpus's (content_hash) table — pass
     None for the bootstrap batch.  Returns the batch's surviving rows

@@ -1,4 +1,10 @@
-"""S1 extract + S2 mention/structure detection.
+"""S1 pages scan + extract, S2 mention/structure detection.
+
+read_pages: the pipeline's one input, the pages(url, warc_ts, html, text,
+lang) table, read with its schema checked at the boundary (PAGES), so a
+drifted corpus is a ValueError at the read, not a failure deep inside the
+extract UDF.  The check reads only the footer schema the parquet read
+already infers; it adds no job.
 
 extract_text: pages -> (url, lang, text) with the byte-identical cleaning
 contract, via one Arrow-batched pandas UDF over the binary html column.
@@ -15,10 +21,34 @@ downstream scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wikdict_gen_spark.functions.spark_udfs import extract_text_udf
+
+# The pages schema (BASELINE.json input_hint): column -> Spark SQL type.
+PAGES = {
+    "url": "string",
+    "warc_ts": "timestamp",
+    "html": "binary",
+    "text": "string",
+    "lang": "string",
+}
+
+
+def read_pages(spark: SparkSession, path: str) -> DataFrame:
+    """Read and validate a pages corpus (url, warc_ts, html, text, lang)."""
+    df = spark.read.parquet(path)
+    got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    missing = set(PAGES) - set(got)
+    if missing:
+        raise ValueError(f"pages corpus at {path} missing columns: {sorted(missing)}")
+    for name, want in PAGES.items():
+        if got[name] != want:
+            raise ValueError(
+                f"pages corpus column {name!r}: expected {want}, got {got[name]}"
+            )
+    return df.select(*PAGES)
 
 
 def extract_text(pages: DataFrame) -> DataFrame:
@@ -28,25 +58,23 @@ def extract_text(pages: DataFrame) -> DataFrame:
     )
 
 
-def records(extracted: DataFrame, keep_url: bool = False) -> DataFrame:
+def records(extracted: DataFrame) -> DataFrame:
     """Explode page text into tab-separated record lines (tag, parts).
 
-    keep_url=False (default) drops the source url from the fan-out: no
-    fact table consumes it, and the records relation is the widest
-    multi-consumer intermediate in the pipeline (seven raw-table filters
-    re-scan it), so a ~35-char provenance string per record line is pure
-    shuffle/cache traffic at scale.  Page-level provenance lives in the
-    extract stage (url -> byte-identical text contract) and snapshot-level
-    lineage in the catalog's metrics rows; pass keep_url=True when
-    debugging record attribution.
+    The source url is dropped from the fan-out: no fact table consumes
+    it, and the records relation is the widest multi-consumer
+    intermediate in the pipeline (seven raw-table filters re-scan it), so
+    a ~35-char provenance string per record line is pure shuffle/cache
+    traffic at scale.  Page-level provenance lives in the extract stage
+    (url -> byte-identical text contract) and snapshot-level lineage in
+    the catalog's metrics rows.
     """
-    cols = (["url"] if keep_url else []) + ["lang"]
     lines = extracted.select(
-        *cols,
+        "lang",
         F.explode(F.split(F.col("text"), "\n")).alias("line"),
     ).where(F.col("line").startswith("#"))
     return lines.select(
-        *cols,
+        "lang",
         F.split(F.col("line"), "\t").alias("p"),
     ).withColumn("tag", F.col("p").getItem(0))
 
@@ -60,7 +88,7 @@ def parse_records(extracted: DataFrame, recs: DataFrame | None = None) -> dict[s
     """Structure detection: record lines -> raw fact DataFrames.
 
     Returns dict with keys entry/pos/gender/pronun/form/translation/nym.
-    Shapes mirror the reference's raw tables (schemas.RAW_*).  Pass a
+    Shapes mirror the reference's raw tables (FIXTURES.md §2).  Pass a
     pre-materialized `recs` (from records()) to avoid re-exploding the
     page bodies once per fact table.
     """

@@ -16,8 +16,8 @@ the running session index reproducible across engines and runs even when
 timestamps collide; gap decisions only read the predecessor's ts, which is
 tie-order-invariant.
 
-The streaming twin is `streaming/windows.py` (watermarked windows /
-applyInPandasWithState); this is the batch/backfill path.
+Batch only: the streaming path (`streaming/windows.py`) has tumbling
+event windows, not sessions.
 """
 
 from __future__ import annotations

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from wikdict_gen_spark.catalog import Catalog
 from wikdict_gen_spark.operators import canonicalize, generic, infer, materialize, process
-from wikdict_gen_spark.operators.extract import extract_text, parse_records, records
+from wikdict_gen_spark.operators.extract import extract_text, parse_records, read_pages, records
 from wikdict_gen_spark.operators.partitioning import widen_if_narrow
 
 # Stages referenced by 2+ downstream consumers.  In fused mode these are
@@ -153,7 +153,9 @@ def run_pipeline(spark: SparkSession, pages_path: str, workdir: str,
     """Run (or resume) the full pipeline; returns all stage DataFrames.
 
     stop_after: name of the last stage to commit (for resume testing);
-    an unknown name raises ValueError before any Spark job runs.
+    an unknown name raises ValueError before any Spark job runs.  A pages
+    corpus whose schema is not PAGES (operators/extract.py) raises
+    ValueError at the read, before the workdir is created.
 
     fused=True replaces per-stage snapshot commits with lazy local
     checkpoints of FANOUT_STAGES: shared stages materialize once on first
@@ -173,8 +175,9 @@ def run_pipeline(spark: SparkSession, pages_path: str, workdir: str,
     if stop_after is not None and stop_after not in _BUILDS:
         raise ValueError(
             f"unknown stop_after {stop_after!r}; valid stages: {', '.join(_BUILDS)}")
+    pages = widen_if_narrow(read_pages(spark, pages_path))
     cat = Catalog(spark, workdir)
-    out = _Stages(pages=widen_if_narrow(spark.read.parquet(pages_path)))
+    out = _Stages(pages=pages)
     for name, build, partition_by in STAGES:
         if name in out or name in out.pending:
             continue  # bound early by _overlap_cc

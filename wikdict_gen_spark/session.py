@@ -124,10 +124,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    """Stop the active session (needed to switch local[k] parallelism)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

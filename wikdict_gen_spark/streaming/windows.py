@@ -1,69 +1,17 @@
-"""Streaming windowed aggregation + custom stateful operators.
+"""Streaming windowed aggregation: tumbling event-time windows under a
+watermark.
 
-Two engine capabilities the batch reference has no analog for:
-
-- `windowed_page_stats`: tumbling event-time windows over the crawl
-  timestamp with a watermark, so late pages update their window until the
-  watermark passes and are dropped after — the standard late-data
-  contract for a feed that arrives hours out of order.
-- `streaming_exact_dedup`: cross-micro-batch exact dedup as a custom
-  stateful operator (`applyInPandasWithState`): state is one counter per
-  content hash, the first arrival is emitted as canonical, later
-  arrivals only bump the duplicate count.  At 100 TB the state store
-  shards by the hash key across executors; an opt-in processing-time
-  timeout (`timeout_ms=LIVE_STREAM_TTL_MS` for live streams) ages
-  abandoned keys out instead of growing state forever — a timed-out key
-  is dropped and its content re-arrives as canonical, the correct trade
-  for a crawl stream where a hash silent for a month is effectively a
-  new document.  The default is no timeout so Trigger.AvailableNow
-  replays terminate (a pending timer would re-trigger forever).
+`windowed_event_stats` is the operator q_stream_event_windows runs over a
+real file-source stream.  The watermark bounds state: an event later than
+`watermark` behind the stream's max event time is dropped, everything
+newer updates its window in place — the standard late-data contract for
+a feed that arrives hours out of order.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-
-def windowed_page_stats(
-    pages_stream: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per (window, lang): page count + distinct-url estimate.
-
-    Event time is `warc_ts` (the crawl timestamp).  The watermark bounds
-    state: a page later than `watermark` behind the stream's max event
-    time is dropped, everything newer updates its window in place.
-    approx_count_distinct keeps the distinct-url state O(1) per window
-    (an exact countDistinct is unbounded state in streaming).
-    """
-    return (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_pages"),
-            F.approx_count_distinct("url").alias("n_urls_approx"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "lang",
-            "n_pages",
-            "n_urls_approx",
-        )
-    )
 
 
 def windowed_event_stats(
@@ -73,18 +21,16 @@ def windowed_event_stats(
     ts_col: str = "ts",
     key_col: str = "event_type",
 ) -> DataFrame:
-    """Tumbling event-time windows with exact, engine-portable aggregates —
-    the oracle-comparable twin of windowed_page_stats.
+    """Per (window, key): event count plus min/max of user and value.
 
-    Same watermark + window + stateful-aggregation plan shape, but every
-    output value is reproducible by an independent SQL engine: count plus
-    min/max (order-independent even on doubles), no HLL sketch.  Run
-    under Trigger.AvailableNow with COMPLETE output mode the result is
-    batching-invariant and equals the batch groupBy — that is what puts
-    the streaming execution path itself under the row-hash oracle
-    (q_stream_event_windows); append-mode late-data semantics stay under
-    pytest (test_streaming_windows), where the trigger-dependent window
-    flush can be asserted batch by batch.
+    Every output value is reproducible by an independent SQL engine:
+    count plus min/max (order-independent even on doubles), no HLL
+    sketch.  Run under Trigger.AvailableNow with COMPLETE output mode the
+    result is batching-invariant and equals the batch groupBy — that is
+    what puts the streaming execution path itself under the row-hash
+    oracle (q_stream_event_windows); the late-data drop stays under
+    pytest (test_streaming_windows), where the trigger-dependent
+    watermark can be asserted batch by batch.
     """
     return (
         events_stream.withWatermark(ts_col, watermark)
@@ -104,154 +50,5 @@ def windowed_event_stats(
             "max_user",
             "min_value",
             "max_value",
-        )
-    )
-
-
-DEDUP_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("content_hash", StringType(), False),
-        StructField("url", StringType()),
-        StructField("lang", StringType()),
-        StructField("first_ts", TimestampType()),
-        StructField("n_dups_total", LongType(), False),
-    ]
-)
-
-DEDUP_STATE_SCHEMA = StructType(
-    [
-        StructField("n_seen", LongType(), False),
-        StructField("first_url", StringType()),
-        StructField("first_ts", TimestampType()),
-    ]
-)
-
-
-def _make_dedup_fn(timeout_ms: int | None):
-    """Build the stateful per-group function; `timeout_ms` arms the
-    processing-time clock on every update when set."""
-
-    def _dedup_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Per content-hash group: emit the canonical (first) row once, keep
-        a running duplicate counter in state.  Deterministic canonical
-        choice: the lexically smallest url of the first batch that sees the
-        key; first_ts is that canonical row's warc_ts, held in state so
-        every later emission carries the true first sighting."""
-        if state.hasTimedOut:
-            # key went `timeout` without traffic: drop it.  Its next
-            # arrival is treated as a brand-new canonical document.
-            state.remove()
-            return
-        (n_seen, first_url, first_ts) = (
-            state.get if state.exists else (0, None, None)
-        )
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values("url", kind="mergesort")
-        new_total = n_seen + len(batch)
-        if n_seen == 0:
-            first_url = batch.iloc[0]["url"]
-            first_ts = batch.iloc[0]["warc_ts"].to_pydatetime()
-        state.update((int(new_total), first_url, first_ts))
-        if timeout_ms is not None:
-            state.setTimeoutDuration(int(timeout_ms))
-        out = pd.DataFrame(
-            {
-                "content_hash": [key[0]],
-                "url": [first_url],
-                "lang": [batch.iloc[0]["lang"]],
-                "first_ts": [first_ts],
-                "n_dups_total": [int(new_total)],
-            }
-        )
-        yield out
-
-    return _dedup_fn
-
-
-LIVE_STREAM_TTL_MS = 30 * 24 * 3600 * 1000  # the recommended live-stream TTL
-
-
-def streaming_exact_dedup(
-    pages_stream: DataFrame, timeout_ms: int | None = None
-) -> DataFrame:
-    """Cross-batch exact dedup: one output row per content hash per batch
-    it appears in, carrying the canonical url and the running duplicate
-    count (n_dups_total).  Downstream keeps rows where n_dups_total equals
-    the batch's first sighting or aggregates the counts — either way the
-    canonical choice is stable across batches because it lives in state.
-
-    `timeout_ms` bounds the state store: a content hash with no arrivals
-    for that processing-time duration is evicted (its state would
-    otherwise grow one entry per distinct hash, forever, on an endless
-    crawl stream).  Timeouts fire only in a data-bearing trigger, so
-    eviction is lazy but state stays bounded as long as the stream flows.
-
-    The default is None — NO timeout — because a pending processing-time
-    timer makes Trigger.AvailableNow keep scheduling micro-batches
-    forever, so a TTL default would hang every bounded replay (the common
-    test/backfill trigger) out of the box.  None pins keys for the
-    lifetime of the query: correct for bounded replays, unbounded for
-    live streams — a LIVE stream MUST opt in to a TTL, e.g.
-    `timeout_ms=LIVE_STREAM_TTL_MS` (30 days: a hash silent for a month
-    is effectively a new document; its next arrival re-emits as
-    canonical, the correct trade for a crawl feed).
-    """
-    hashed = pages_stream.select(
-        F.md5(
-            F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-        ).alias("content_hash"),
-        "url",
-        "lang",
-        "warc_ts",
-    )
-    return hashed.groupBy("content_hash").applyInPandasWithState(
-        _make_dedup_fn(timeout_ms),
-        outputStructType=DEDUP_OUTPUT_SCHEMA,
-        stateStructType=DEDUP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if timeout_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
-    )
-
-
-def session_stats_stream(
-    events_stream: DataFrame,
-    gap: str = "4 hours",
-    watermark: str = "1 day",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming gap-based sessionization via Spark's native
-    `session_window`: one row per (user, session), where a session closes
-    once the user is silent for `gap` AND the watermark has passed its
-    end (so a session is emitted exactly once, in append mode).
-
-    The batch twin is `operators/sessions.py::session_stats` (explicit
-    lag -> flag -> running-index arithmetic); both implement the same
-    inactivity-gap semantics, and the entry-point row `q_session_window`
-    cross-checks Spark's built-in session assignment against the
-    independent lag/cumsum SQL derivation at second granularity.
-
-    State bound: open sessions per active user — closed by watermark
-    passage, so state is O(users active within the watermark horizon),
-    never O(history).  Session merging (two open windows bridged by a
-    late event inside the watermark) is handled by the operator itself;
-    that is the part the hand-rolled batch arithmetic cannot express
-    incrementally and WHY the streaming path uses the built-in.
-    """
-    return (
-        events_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.col(user_col), F.session_window(F.col(ts_col), gap).alias("sw"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            user_col,
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
         )
     )
