@@ -18,7 +18,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -29,7 +28,7 @@ from wikdict_gen_spark.operators import fuzzy as FZ
 from wikdict_gen_spark.operators import graph as G
 from wikdict_gen_spark.operators import infer as I
 from wikdict_gen_spark.operators import process as P
-from wikdict_gen_spark.operators.partitioning import widen_if_narrow
+from wikdict_gen_spark.operators.partitioning import checkpoint, widen_if_narrow
 from wikdict_gen_spark.operators import sampling as SM
 from wikdict_gen_spark.operators import similarity as S
 from wikdict_gen_spark.operators import skew as SK
@@ -37,51 +36,25 @@ from wikdict_gen_spark.operators import textstats as T
 from wikdict_gen_spark.operators import webclean as WC
 
 
-# widened table reads, memoized per (application, sf_dir, table).  The
-# memo returns the SAME DataFrame object for repeated reads, which (a)
-# lets one query reference a table twice without tripping Spark's
-# duplicate-CollectMetrics check (same-instance reuse is the allowed
-# case), and (b) keeps the warm and timed bench builds of a query
-# plan-identical, so CacheManager matching of persisted subtrees
-# (pagerank's loop invariants) behaves exactly as it did before the
-# widening existed.  Nothing is persisted here — the frame is a plan,
-# recomputed wherever it is used.
-_WIDE: dict[tuple, DataFrame] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # one-row-group parquet (the testdata layout) scans as ONE task; widen
-    # before the per-row compute fused onto the scan goes single-threaded
-    # (no-op whenever the layout already planned >= cores partitions)
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    df = _WIDE.get(key)
-    if df is None:
-        for stale in [k for k in _WIDE if k[0] == app and k[1] != sf_dir]:
-            del _WIDE[stale]
-        df = widen_if_narrow(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-        _WIDE[key] = df
-    return df
-
-
-# Shared derived inputs are localCheckpoint(eager=False)-memoized per
-# (application, sf_dir): logical plans are trees, so without the lineage cut
-# every re-reference of the derived edge table re-inlines its scan+DISTINCT
-# subtree (30 separate lineitem scans in the round-2 q_gap_rule plan) and
-# every KG query rebuilds backlink/indirect from scratch.  The checkpoint
-# truncates the plan to a LogicalRDD computed once per session; serialized
-# blocks keep the multi-consumer re-scans compact (same discipline as
-# pipeline.FANOUT_STAGES, wikdict_gen_spark/pipeline.py).
-_CKPT_LEVEL = StorageLevel(True, True, False, False, 1)
+# Session memo per (application, sf_dir, key).  It returns the SAME
+# DataFrame object for repeated requests, which (a) lets one query
+# reference a table twice without tripping Spark's duplicate-CollectMetrics
+# check on the widened reads (same-instance reuse is the allowed case),
+# (b) keeps the warm and timed bench builds of a query plan-identical, so
+# CacheManager matching of persisted subtrees (pagerank's loop invariants)
+# behaves as it did before the widening existed, and (c) computes each
+# checkpointed derived input once per session: without the lineage cut
+# every re-reference of the derived edge table re-inlines its
+# scan+DISTINCT subtree (30 separate lineitem scans in the round-2
+# q_gap_rule plan) and every KG query rebuilds backlink/indirect.
 _MEMO: dict[tuple, DataFrame] = {}
 
 
 def clear_memo() -> None:
-    """Drop every memoized checkpoint reference.  Spark's ContextCleaner
-    unpersists checkpoint blocks once the last DataFrame reference is
-    gone, so releasing the dict entries releases executor storage."""
+    """Drop every memoized frame.  Spark's ContextCleaner unpersists
+    checkpoint blocks once the last DataFrame reference is gone, so
+    releasing the dict entries releases executor storage."""
     _MEMO.clear()
-    _WIDE.clear()
 
 
 def _memo(spark: SparkSession, sf_dir: str, key: str, build) -> DataFrame:
@@ -90,13 +63,24 @@ def _memo(spark: SparkSession, sf_dir: str, key: str, build) -> DataFrame:
     df = _MEMO.get(mk)
     if df is None:
         # moving to a different sf_dir in the same application evicts the
-        # previous dataset's checkpoints — queries iterate one dataset at
-        # a time, so stale entries would only pin dead executor storage
+        # previous dataset's entries — queries iterate one dataset at a
+        # time, so stale entries would only pin dead executor storage
         for stale in [m for m in _MEMO if m[0] == app and m[1] != sf_dir]:
             del _MEMO[stale]
-        df = build().localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL)
+        df = build()
         _MEMO[mk] = df
     return df
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    # one-row-group parquet (the testdata layout) scans as ONE task; widen
+    # before the per-row compute fused onto the scan goes single-threaded
+    # (no-op whenever the layout already planned >= cores partitions).
+    # Nothing is persisted: the frame is a plan, recomputed where used.
+    # The file-name key cannot collide with a derived input's name.
+    path = f"{name}.parquet"
+    return _memo(spark, sf_dir, path,
+                 lambda: widen_if_narrow(spark.read.parquet(f"{sf_dir}/{path}")))
 
 
 # --- derived edge table (shared by Spark and oracle SQL) ---------------------
@@ -125,7 +109,7 @@ ALL_TRANS_SQL = """
 def derived_all_trans(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-        return spark.sql(ALL_TRANS_SQL)
+        return checkpoint(spark.sql(ALL_TRANS_SQL))
 
     return _memo(spark, sf_dir, "all_trans", build)
 
@@ -133,16 +117,16 @@ def derived_all_trans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shared_backlink(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memo(
         spark, sf_dir, "backlink",
-        lambda: I.backlink_score(derived_all_trans(spark, sf_dir)),
+        lambda: checkpoint(I.backlink_score(derived_all_trans(spark, sf_dir))),
     )
 
 
 def shared_indirect(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memo(
         spark, sf_dir, "indirect",
-        lambda: I.indirect(
+        lambda: checkpoint(I.indirect(
             derived_all_trans(spark, sf_dir), shared_backlink(spark, sf_dir)
-        ),
+        )),
     )
 
 

@@ -25,7 +25,14 @@ def test_memo_reuses_and_evicts(spark, tmp_path):
         (d1, "k"), (d1, "k2")
     }
 
-    # a DIFFERENT sf_dir evicts every entry of the previous dataset
+    # widened table reads share the memo under their file name
+    spark.range(2).write.parquet(f"{d1}/t.parquet")
+    t = entry._t(spark, d1, "t")
+    assert entry._t(spark, d1, "t") is t
+    assert (app, d1, "t.parquet") in entry._MEMO
+
+    # a DIFFERENT sf_dir evicts every entry of the previous dataset,
+    # table reads included
     entry._memo(spark, d2, "k", build)
     assert len(calls) == 3
     assert {(m[1], m[2]) for m in entry._MEMO if m[0] == app} == {(d2, "k")}

@@ -1,6 +1,13 @@
-"""Every module under wikdict_gen_spark/ is imported, directly or
-transitively, from a production entry point; a module that only its own
-tests import fails here.  Pure `ast` walk, no JVM."""
+"""Guards against regrowth, by pure `ast` walks (no JVM):
+
+- every module under wikdict_gen_spark/ is imported, directly or
+  transitively, from a production entry point; a module that only its
+  own tests import fails here;
+- every defaulted parameter of a public function under wikdict_gen_spark/
+  is passed by some call in the repo (tests and perfbench/ included);
+  one that no caller sets is a constant, not an option;
+- the checkpoint storage level is built in one place.
+"""
 
 import ast
 from pathlib import Path
@@ -55,3 +62,72 @@ def test_every_package_module_is_reachable():
     package = set((ROOT / "wikdict_gen_spark").rglob("*.py"))
     unreached = sorted(_module(p) for p in package - seen)
     assert not unreached, f"modules no entry point imports: {unreached}"
+
+
+def _sources():
+    return [p for p in ROOT.rglob("*.py")
+            if not any(part.startswith(".") for part in p.relative_to(ROOT).parts)]
+
+
+def _call_name(call: ast.Call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+
+
+def _defaulted_params(tree: ast.Module):
+    """(function, parameter, positional index or None) of every defaulted
+    parameter of a public function or public-class method."""
+    def walk(node, in_class):
+        for n in ast.iter_child_nodes(node):
+            if isinstance(n, ast.ClassDef) and not n.name.startswith("_"):
+                yield from walk(n, True)
+            elif isinstance(n, ast.FunctionDef) and not n.name.startswith("_"):
+                a = n.args
+                pos = a.posonlyargs + a.args
+                first = len(pos) - len(a.defaults)
+                for i in range(first, len(pos)):
+                    yield n.name, pos[i].arg, i - in_class
+                for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                    if d is not None:
+                        yield n.name, arg.arg, None
+    yield from walk(tree, False)
+
+
+def test_every_option_has_a_caller():
+    trees = {p: ast.parse(p.read_text()) for p in _sources()}
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and (name := _call_name(node)):
+                calls.setdefault(name, []).append(node)
+
+    def passed(fn: str, param: str, index: int | None) -> bool:
+        for c in calls.get(fn, []):
+            if any(k.arg in (param, None) for k in c.keywords):
+                return True  # by keyword, or through **kwargs
+            if any(isinstance(a, ast.Starred) for a in c.args):
+                return True
+            if index is not None and len(c.args) > index:
+                return True
+        return False
+
+    package = ROOT / "wikdict_gen_spark"
+    unset = sorted(
+        f"{_module(p)}.{fn}({param})"
+        for p, tree in trees.items() if package in p.parents
+        for fn, param, index in _defaulted_params(tree)
+        if not passed(fn, param, index)
+    )
+    assert not unset, f"parameters no caller passes: {unset}"
+
+
+def test_storage_level_built_in_one_place():
+    allowed = ROOT / "wikdict_gen_spark" / "operators" / "partitioning.py"
+    files = [*(ROOT / "wikdict_gen_spark").rglob("*.py"), ROOT / "__spark_entry__.py"]
+    sites = sorted(
+        f"{p.relative_to(ROOT)}:{node.lineno}"
+        for p in files if p != allowed
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Call) and _call_name(node) == "StorageLevel"
+    )
+    assert not sites, f"StorageLevel( outside partitioning.py: {sites}"

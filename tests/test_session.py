@@ -38,10 +38,16 @@ def test_overrides():
     assert conf["spark.sql.shuffle.partitions"] == "16"
 
 
-@pytest.mark.parametrize("mem", ["lots", "2048000k", "6 gb", ""])
+@pytest.mark.parametrize("mem", ["lots", "2048000k", "6 gb", "", "0g", "0m"])
 def test_unparseable_driver_mem_raises(mem):
     with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
         session_conf(env={"SPARK_GRAFT_DRIVER_MEM": mem}, host=(4, 15 * GB))
+
+
+@pytest.mark.parametrize("cpus", ["0", "-2", "four", "2.5", ""])
+def test_bad_cpus_raises(cpus):
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session_conf(env={"SPARK_GRAFT_CPUS": cpus}, host=(4, 15 * GB))
 
 
 def test_driver_mem_above_ram_raises():

@@ -297,12 +297,11 @@ def _plant_background(plan: _Plan, rng: random.Random, n_concepts: int) -> None:
     _plant_background_range(plan, rng, 10, n_concepts)
 
 
-def _plant_background_range(plan: _Plan, rng: random.Random, lo: int, hi: int,
-                            langs: tuple[str, ...] = LANGS) -> None:
+def _plant_background_range(plan: _Plan, rng: random.Random, lo: int, hi: int) -> None:
     pos_choices = ("noun", "verb", "adjective")
     present: dict[tuple[str, int], str] = {}
     for c in range(lo, hi):
-        for lang in langs:
+        for lang in LANGS:
             if rng.random() < 0.9:
                 present[(lang, c)] = _word(lang, c)
     entries: dict[tuple[str, int], str] = {}
@@ -324,7 +323,7 @@ def _plant_background_range(plan: _Plan, rng: random.Random, lo: int, hi: int,
         n_senses = 1 + (c + zlib.crc32(lang.encode())) % 2
         for s in range(1, n_senses + 1):
             gloss = f"meaning {word} {s}"
-            for to_lang in langs:
+            for to_lang in LANGS:
                 if to_lang == lang or (to_lang, c) not in present:
                     continue
                 if rng.random() < 0.55:
@@ -362,14 +361,12 @@ def _chunk_pages(args: tuple) -> str:
     Chunk 0 also plants the special semantic cases.  Deterministic per
     (seed, chunk) regardless of worker scheduling.
     """
-    out_dir, chunk_idx, lo, hi, seed = args[:5]
-    langs = args[5] if len(args) > 5 else LANGS
+    out_dir, chunk_idx, lo, hi, seed = args
     rng = random.Random(seed * 1_000_003 + chunk_idx)
     plan = _Plan()
-    if chunk_idx == 0 and langs == LANGS:
-        # the special cases are authored in the default 4-language world
+    if chunk_idx == 0:
         _plant_special_cases(plan, rng)
-    _plant_background_range(plan, rng, lo, hi, langs=langs)
+    _plant_background_range(plan, rng, lo, hi)
     pages = {"url": [], "warc_ts": [], "html": [], "text": [], "lang": []}
     for i, ((lang, word), recs) in enumerate(sorted(plan.page_records.items())):
         url = f"https://fixture.test/{lang}/{word}"
@@ -401,17 +398,12 @@ def _chunk_pages(args: tuple) -> str:
 
 
 def build_bench_corpus(out_dir: str | Path, n_concepts: int, seed: int = 42,
-                       workers: int = 8,
-                       langs: tuple[str, ...] = LANGS) -> str:
+                       workers: int = 8) -> str:
     """Parallel pages-only corpus for throughput benchmarking.
 
     Writes pages.parquet as a directory of parts (splittable, many files —
     the realistic crawl layout).  No plan/oracle tables: benchmarks measure
     throughput, correctness is the small fixture's job.
-
-    langs widens the language set (default: the 4-language bench world;
-    the 650-pair rehearsal passes all 26 registry languages, which skips
-    the 4-language special cases).
     """
     from multiprocessing import Pool
 
@@ -424,7 +416,7 @@ def build_bench_corpus(out_dir: str | Path, n_concepts: int, seed: int = 42,
     idx = 0
     while lo < n_concepts:
         hi = min(lo + chunk, n_concepts)
-        jobs.append((str(out), idx, lo, hi, seed, tuple(langs)))
+        jobs.append((str(out), idx, lo, hi, seed))
         lo, idx = hi, idx + 1
     with Pool(min(workers, len(jobs))) as pool:
         pool.map(_chunk_pages, jobs)

@@ -46,6 +46,11 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return relinked.unionByName(self_links).distinct()
 
 
+# the alternating-star loop converges in O(log n) rounds; hitting this
+# bound means something is wrong, and connected_components raises
+_MAX_ITERATIONS = 30
+
+
 def _checksum(edges: DataFrame) -> tuple[int, int]:
     row = edges.agg(
         F.count(F.lit(1)).alias("n"),
@@ -54,7 +59,7 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def connected_components(edges: DataFrame, max_iterations: int = 30) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(u, v) -> mapping(node, canonical) with canonical = component min.
 
     Every node mentioned in the input appears in the output (including as
@@ -68,14 +73,14 @@ def connected_components(edges: DataFrame, max_iterations: int = 30) -> DataFram
     cur = edges.select("u", "v").where(F.col("u") != F.col("v")).distinct()
     cur = cur.localCheckpoint(eager=True)
     prev_sig = None
-    for _ in range(max_iterations):
+    for _ in range(_MAX_ITERATIONS):
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         sig = _checksum(cur)
         if sig == prev_sig:
             break
         prev_sig = sig
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iterations} iterations")
+        raise RuntimeError(f"connected_components did not converge in {_MAX_ITERATIONS} iterations")
     star = cur.select(F.col("u").alias("node"), F.col("v").alias("canonical"))
     # after convergence each non-root points straight at its component min
     mapping = (

@@ -17,25 +17,20 @@ shared subtrees re-execute once per consumer unless the lineage is cut.
 The two multi-consumer trunks here — the canonical-docs table (feeds the
 shingle derivation, the anti-join probe and the output projection) and
 the shingle table (feeds the MinHash signatures and both sides of the
-Jaccard verification) — are `localCheckpoint(eager=False)`-materialized,
-the same discipline as pipeline.FANOUT_STAGES.  Without the cut the
-round-4 final plan held 60 parquet scans and ran the tokenize+explode
-derivation 4x; at 100 TB that is 3-4 redundant passes over the corpus.
+Jaccard verification, dedup._verified_pairs) — are checkpointed.
+Without the cut the round-4 final plan held 60 parquet scans and ran the
+tokenize+explode derivation 4x; at 100 TB that is 3-4 redundant passes
+over the corpus.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wikdict_gen_spark.operators import dedup as D
 from wikdict_gen_spark.operators import textstats as T
-
-# serialized blocks: both checkpoints are re-scanned by several consumers,
-# and deserialized row objects make those scans GC-bound (same level as
-# pipeline._CKPT_LEVEL / __spark_entry__._CKPT_LEVEL)
-_CKPT_LEVEL = StorageLevel(True, True, False, False, 1)
+from wikdict_gen_spark.operators.partitioning import checkpoint
 
 
 def clean_corpus(
@@ -45,76 +40,40 @@ def clean_corpus(
     num_hashes: int = 4,
     bands: int = 2,
     k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     compact: bool = True,
-    materialize: bool = True,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Surviving documents of the full prep pipeline.
 
-    Returns (id_col, quality, content_hash): one row per kept document —
+    Returns (doc_id, quality, content_hash): one row per kept document —
     above the quality floor, canonical for its exact-content group
     (minimum id), and not a verified near-dup of any smaller canonical
     id.  `compact=False` pins the md5-portable MinHash shape (the oracle
-    path); production keeps the xxhash64 default.  `materialize=False`
-    skips the fan-out checkpoints and leaves one raw lazy plan — only
-    useful for plan inspection; the default is the shape you run.
+    path); production keeps the xxhash64 default.
 
     Scale notes: the quality gate is pure column arithmetic fused into
     the single corpus scan; exact dedup is one window-min on the 128-bit
     hash carrying the full row (no join back); candidates come from
     banded LSH buckets, so the pair count is driven by real collisions,
     not |docs|²; Jaccard runs only on those pairs, against the one
-    materialized shingle table.  At web scale pass `max_bucket_size`:
-    boilerplate mega-buckets are clique-collapsed to (bucket-min,
-    member) pairs — lossless for the greedy drop rule, and it bounds
-    the n^2 pair explosion AQE cannot split (input-bytes heuristic;
-    see lsh_candidate_pairs).
+    materialized shingle table.
     """
     # quality_score is a withColumn — the gated frame IS the good-docs
     # frame, every input column intact (a join back to docs would be a
     # no-op self-join costing one SortMergeJoin + a duplicate corpus scan)
-    good = T.quality_score(docs, text_col=text_col).where(
+    good = T.quality_score(docs).where(
         F.col("quality") >= F.lit(float(quality_min))
     )
 
     # canonical representative per exact-content group, among good docs;
     # content_hash is carried on the row from here to the output — never
     # re-derived, never re-joined
-    canon = D.exact_dedup_rows(good, id_col=id_col, text_col=text_col).select(
-        id_col, "quality", text_col, "content_hash"
-    )
-    if materialize:
-        canon = canon.localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL)
-
-    # one shingle derivation feeds the signatures AND both sides of the
-    # Jaccard verification; the checkpoint makes "one" literal (within a
-    # single lazy plan the consumers would each re-execute the subtree)
-    sh = D.shingles(canon, id_col=id_col, text_col=text_col, k=k)
-    if materialize:
-        sh = sh.localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL)
-    sig = D.minhash_signatures(sh, id_col=id_col,
-                               num_hashes=num_hashes, compact=compact)
-    pairs = D.lsh_candidate_pairs(sig, id_col=id_col,
-                                  num_hashes=num_hashes, bands=bands,
-                                  max_bucket_size=max_bucket_size)
-    # the verification join moves the candidate docs' shingle sets; hash
-    # the join key to 8-byte longs so the exchange carries keys, not gram
-    # text (guide: shuffle metadata, not payloads).  Jaccard here only
-    # feeds the >= threshold gate, and a cross-doc xxhash64 collision
-    # between DIFFERENT grams of a candidate pair (~|pairs| * |grams|^2 /
-    # 2^64 ~ 1e-10 at sandbox scale) is the only way a value could move;
-    # verified equal row-for-row against the string-keyed path on every
-    # testdata SF.
-    sh_keyed = sh.select(id_col, F.xxhash64("shingle").alias("shingle"))
-    verified = D.ngram_jaccard(None, pairs, id_col=id_col,
-                               shingles_df=sh_keyed).where(
-        F.col("jaccard") >= F.lit(float(jaccard_threshold))
-    )
+    canon = checkpoint(D.exact_dedup_rows(good).select(
+        "doc_id", "quality", "text", "content_hash"
+    ))
+    verified = D._verified_pairs(canon, jaccard_threshold, num_hashes, bands, k, compact)
     # greedy drop: id_b > id_a by construction of the pair list, so every
     # verified pair eliminates its larger id
-    drops = verified.select(F.col("id_b").alias(id_col)).distinct()
-    return canon.join(drops, id_col, "left_anti").select(
-        id_col, "quality", "content_hash"
+    drops = verified.select(F.col("id_b").alias("doc_id")).distinct()
+    return canon.join(drops, "doc_id", "left_anti").select(
+        "doc_id", "quality", "content_hash"
     )

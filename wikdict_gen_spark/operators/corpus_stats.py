@@ -23,13 +23,10 @@ from pyspark.sql import functions as F
 from .dedup import _norm_text
 from .textstats import quality_score
 
+# percentile_approx accuracy: rank error <= 1/accuracy
+_QUANTILE_ACCURACY = 10000
 
-def source_stats(
-    docs: DataFrame,
-    source_col: str = "source",
-    lang_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def source_stats(docs: DataFrame) -> DataFrame:
     """Exact per-(source, lang) corpus health rollup.
 
     Returns (source, lang, n_docs, n_distinct, dup_rate, mean_quality,
@@ -45,12 +42,12 @@ def source_stats(
     lands on the distinct phase where AQE's skew split applies, because
     the pre-aggregation key includes the high-cardinality hash.
     """
-    scored = quality_score(docs, text_col).withColumn(
-        "__ch", F.md5(_norm_text(F.col(text_col)))
+    scored = quality_score(docs).withColumn(
+        "__ch", F.md5(_norm_text(F.col("text")))
     )
     n = F.count(F.lit(1))
     return (
-        scored.groupBy(source_col, lang_col)
+        scored.groupBy("source", "lang")
         .agg(
             n.alias("n_docs"),
             F.countDistinct("__ch").alias("n_distinct"),
@@ -60,20 +57,14 @@ def source_stats(
             ).alias("dup_rate"),
             (F.sum("quality") / n.cast("double")).alias("mean_quality"),
             (
-                F.sum(F.length(F.col(text_col))).cast("double")
+                F.sum(F.length(F.col("text"))).cast("double")
                 / n.cast("double")
             ).alias("mean_chars"),
         )
     )
 
 
-def corpus_sketches(
-    docs: DataFrame,
-    lang_col: str = "lang",
-    text_col: str = "text",
-    rsd: float = 0.02,
-    quantile_accuracy: int = 10000,
-) -> DataFrame:
+def corpus_sketches(docs: DataFrame, rsd: float = 0.02) -> DataFrame:
     """Sketch-tier per-lang corpus metrics: approximate distinct documents
     and length quantiles in ONE combiner-friendly pass.
 
@@ -91,20 +82,20 @@ def corpus_sketches(
     3*rsd; quantiles within rank error) rather than by the DuckDB oracle,
     because sketch values are engine-specific by design.
     """
-    ch = F.md5(_norm_text(F.col(text_col)))
-    ln = F.length(F.col(text_col))
+    ch = F.md5(_norm_text(F.col("text")))
+    ln = F.length(F.col("text"))
     return (
-        docs.select(F.col(lang_col), ch.alias("__ch"), ln.alias("__len"))
-        .groupBy(lang_col)
+        docs.select(F.col("lang"), ch.alias("__ch"), ln.alias("__len"))
+        .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.approx_count_distinct("__ch", rsd).alias("approx_distinct"),
             F.percentile_approx(
-                "__len", [0.5, 0.9, 0.99], quantile_accuracy
+                "__len", [0.5, 0.9, 0.99], _QUANTILE_ACCURACY
             ).alias("__q"),
         )
         .select(
-            lang_col,
+            "lang",
             "n_docs",
             "approx_distinct",
             F.get("__q", 0).alias("len_p50"),

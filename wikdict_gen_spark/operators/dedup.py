@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from wikdict_gen_spark.operators.partitioning import widen_if_narrow
+from wikdict_gen_spark.operators.partitioning import checkpoint, widen_if_narrow
 
 
 def _norm_text(col):
@@ -21,24 +21,23 @@ def _norm_text(col):
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup on normalized text hash; keeps the minimum id per group.
 
     One shuffle on the 128-bit content hash; output adds n_dups.
     """
-    h = F.md5(_norm_text(F.col(text_col))).alias("content_hash")
+    h = F.md5(_norm_text(F.col("text"))).alias("content_hash")
     return (
-        docs.select(F.col(id_col), h)
+        docs.select(F.col("doc_id"), h)
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).alias(id_col),
+            F.min("doc_id").alias("doc_id"),
             F.count(F.lit(1)).alias("n_dups"),
         )
     )
 
 
-def exact_dedup_rows(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def exact_dedup_rows(docs: DataFrame) -> DataFrame:
     """Exact dedup keeping the canonical full ROW per content group.
 
     Same rule as exact_dedup (minimum id per normalized-content group) but
@@ -49,17 +48,16 @@ def exact_dedup_rows(docs: DataFrame, id_col: str = "doc_id",
     One shuffle on the 128-bit hash (window min) — no join back to the
     input, so the corpus is scanned once.
     """
-    h = docs.withColumn("content_hash", F.md5(_norm_text(F.col(text_col))))
+    h = docs.withColumn("content_hash", F.md5(_norm_text(F.col("text"))))
     w = Window.partitionBy("content_hash")
     return (
-        h.withColumn("__min_id", F.min(id_col).over(w))
-        .where(F.col(id_col) == F.col("__min_id"))
+        h.withColumn("__min_id", F.min("doc_id").over(w))
+        .where(F.col("doc_id") == F.col("__min_id"))
         .drop("__min_id")
     )
 
 
-def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-             k: int = 3) -> DataFrame:
+def shingles(docs: DataFrame, k: int = 3) -> DataFrame:
     """Word k-gram shingles per document (distinct), via JVM-side array ops.
 
     The tokenize + k-gram + distinct chain is the heaviest narrow compute
@@ -68,18 +66,17 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     task: widen first (no-op on any normally-laid-out input).
     """
     docs = widen_if_narrow(docs)
-    toks = F.split(_norm_text(F.col(text_col)), " ")
+    toks = F.split(_norm_text(F.col("text")), " ")
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
         lambda i: F.array_join(F.slice(toks, i + 1, k), " "),
     )
     return docs.select(
-        F.col(id_col), F.explode(F.array_distinct(grams)).alias("shingle")
+        F.col("doc_id"), F.explode(F.array_distinct(grams)).alias("shingle")
     )
 
 
-def minhash_signatures_inline(docs: DataFrame, id_col: str = "doc_id",
-                              text_col: str = "text", k: int = 3,
+def minhash_signatures_inline(docs: DataFrame, k: int = 3,
                               num_hashes: int = 16,
                               compact: bool = True) -> DataFrame:
     """MinHash signatures computed ROW-LOCALLY — zero shuffles.
@@ -100,7 +97,7 @@ def minhash_signatures_inline(docs: DataFrame, id_col: str = "doc_id",
     table is shared with Jaccard verification (clean_corpus
     materializes it once for both consumers).
     """
-    toks = F.split(_norm_text(F.col(text_col)), " ")
+    toks = F.split(_norm_text(F.col("text")), " ")
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
@@ -112,7 +109,7 @@ def minhash_signatures_inline(docs: DataFrame, id_col: str = "doc_id",
     # inlining `grams` directly re-ran tokenize+k-gram+distinct once per
     # seed (measured 3.5x slower; CollapseProject declines to merge the
     # two Projects because __grams has multiple non-cheap references)
-    gcol = docs.select(F.col(id_col), grams.alias("__grams"))
+    gcol = docs.select(F.col("doc_id"), grams.alias("__grams"))
 
     # NB: build per-seed lambdas via a factory — `lambda s, i=i: ...`
     # has two parameters, which pyspark's HOF introspection treats as an
@@ -126,11 +123,11 @@ def minhash_signatures_inline(docs: DataFrame, id_col: str = "doc_id",
         F.array_min(F.transform(F.col("__grams"), _seed_hash(i))).alias(f"h{i}")
         for i in range(num_hashes)
     ]
-    return gcol.select(F.col(id_col), F.array(*mins).alias("minhash"))
+    return gcol.select(F.col("doc_id"), F.array(*mins).alias("minhash"))
 
 
-def minhash_signatures(sh: DataFrame, id_col: str = "doc_id",
-                       num_hashes: int = 16, compact: bool = True) -> DataFrame:
+def minhash_signatures(sh: DataFrame, num_hashes: int = 16,
+                       compact: bool = True) -> DataFrame:
     """MinHash signature per doc: for seed i, min over hash(i || shingle).
 
     compact=True (default): xxhash64 longs — 8 bytes per hash instead of
@@ -139,16 +136,12 @@ def minhash_signatures(sh: DataFrame, id_col: str = "doc_id",
     compact=False: md5 hex strings — engine-portable (hex-string min ==
     numeric min), the oracle-comparison shape (q_minhash_signature pins
     it explicitly).  Same algorithm, same downstream banding contract.
-    Output: (id, minhash array of length num_hashes).
-
-    BREAKING CHANGE NOTE: the default flipped to compact=True (round 3),
-    changing the default output type array<string> -> array<bigint>.
-    Signatures are NOT comparable across the two shapes — any store of
-    md5-shape signatures must be re-derived or read with compact=False.
+    Output: (doc_id, minhash array of length num_hashes).  Signatures
+    are not comparable across the two shapes.
     """
     if compact:
         hashed = sh.select(
-            F.col(id_col),
+            F.col("doc_id"),
             *[
                 F.xxhash64(F.lit(f"seed{i}:"), F.col("shingle")).alias(f"h{i}")
                 for i in range(num_hashes)
@@ -156,19 +149,18 @@ def minhash_signatures(sh: DataFrame, id_col: str = "doc_id",
         )
     else:
         hashed = sh.select(
-            F.col(id_col),
+            F.col("doc_id"),
             *[
                 F.md5(F.concat(F.lit(f"seed{i}:"), F.col("shingle"))).alias(f"h{i}")
                 for i in range(num_hashes)
             ],
         )
-    return hashed.groupBy(id_col).agg(
+    return hashed.groupBy("doc_id").agg(
         F.array(*[F.min(f"h{i}") for i in range(num_hashes)]).alias("minhash")
     )
 
 
-def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
-                        num_hashes: int = 16, bands: int = 4,
+def lsh_candidate_pairs(signatures: DataFrame, num_hashes: int = 16, bands: int = 4,
                         max_bucket_size: int | None = None) -> DataFrame:
     """Band the signatures and bucket-join: docs sharing any band signature
     become a candidate pair (id_a < id_b, distinct).
@@ -191,7 +183,7 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     """
     rows_per_band = num_hashes // bands
     banded = signatures.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array(
                 *[
@@ -215,31 +207,31 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                 ]
             )
         ).alias("bs"),
-    ).select(id_col, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+    ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
     if max_bucket_size is not None:
         # one window pass on the same (band, sig) shuffle key computes the
         # bucket stats; small buckets keep the exact all-pairs join, big
         # ones collapse to (bucket_min, member) with no join at all
         w = Window.partitionBy("band", "sig")
         stats = banded.withColumn("__n", F.count(F.lit(1)).over(w)).withColumn(
-            "__mn", F.min(id_col).over(w)
+            "__mn", F.min("doc_id").over(w)
         )
         big = (
             stats.where(
-                (F.col("__n") > max_bucket_size) & (F.col(id_col) != F.col("__mn"))
+                (F.col("__n") > max_bucket_size) & (F.col("doc_id") != F.col("__mn"))
             )
-            .select(F.col("__mn").alias("id_a"), F.col(id_col).alias("id_b"))
+            .select(F.col("__mn").alias("id_a"), F.col("doc_id").alias("id_b"))
         )
         banded = stats.where(F.col("__n") <= max_bucket_size).select(
-            id_col, "band", "sig"
+            "doc_id", "band", "sig"
         )
     a = banded.alias("a")
     b = banded.alias("b")
     pairs = (
         a.join(b, ["band", "sig"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
     )
     if max_bucket_size is not None:
@@ -247,16 +239,15 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     return pairs.distinct()
 
 
-def ngram_jaccard(docs: DataFrame | None, pairs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", k: int = 3,
+def ngram_jaccard(docs: DataFrame | None, pairs: DataFrame, k: int = 3,
                   shingles_df: DataFrame | None = None) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs (verification step).
 
     Exactly one of `docs` / `shingles_df` must be given.  Pass
     `shingles_df` (with docs=None) when the caller already derived the
     shingle table — e.g. for MinHash signatures upstream — so one
-    tokenize+explode plan feeds both stages; `k` and `text_col` are then
-    ignored (they describe a derivation that does not run here).  Passing
+    tokenize+explode plan feeds both stages; `k` is then ignored (it
+    describes a derivation that does not run here).  Passing
     both is an error: a shingle table derived from a different document
     set or k would silently produce wrong Jaccard values.
     """
@@ -266,10 +257,10 @@ def ngram_jaccard(docs: DataFrame | None, pairs: DataFrame, id_col: str = "doc_i
             "(a shingles_df from a different doc set / k than docs would "
             "yield wrong Jaccard values without any error)"
         )
-    sh = shingles(docs, id_col, text_col, k) if shingles_df is None else shingles_df
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    sh_a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = sh.select(F.col(id_col).alias("id_b"), "shingle")
+    sh = shingles(docs, k=k) if shingles_df is None else shingles_df
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sh_a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
+    sh_b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
     inter = (
         pairs.join(sh_a, "id_a")
         .join(sh_b, ["id_b", "shingle"])
@@ -277,8 +268,8 @@ def ngram_jaccard(docs: DataFrame | None, pairs: DataFrame, id_col: str = "doc_i
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n", "n_b"), "id_b")
+        inter.join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
+        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
         .select(
             "id_a",
             "id_b",
@@ -288,63 +279,61 @@ def ngram_jaccard(docs: DataFrame | None, pairs: DataFrame, id_col: str = "doc_i
     )
 
 
+def _verified_pairs(docs: DataFrame, jaccard_threshold: float, num_hashes: int,
+                    bands: int, k: int, compact: bool) -> DataFrame:
+    """(id_a < id_b) near-dup pairs: LSH candidates whose shingle-set
+    Jaccard verifies at >= `jaccard_threshold`.
+
+    One shingle derivation, checkpointed, feeds the signatures AND both
+    sides of the Jaccard verification (within a single lazy plan the
+    consumers would each re-execute it).  The verification join moves the
+    candidate docs' shingle sets, so the join key is hashed to 8-byte
+    longs: the exchange carries keys, not gram text.  Jaccard here only
+    feeds the threshold gate, and a cross-doc xxhash64 collision between
+    DIFFERENT grams of a candidate pair (~|pairs| * |grams|^2 / 2^64 ~
+    1e-10 at sandbox scale) is the only way a value could move; verified
+    equal row-for-row against the string-keyed path on every testdata SF.
+    Buckets are not capped (see lsh_candidate_pairs' `max_bucket_size`).
+    """
+    sh = checkpoint(shingles(docs, k=k))
+    sig = minhash_signatures(sh, num_hashes=num_hashes, compact=compact)
+    pairs = lsh_candidate_pairs(sig, num_hashes=num_hashes, bands=bands)
+    sh_keyed = sh.select("doc_id", F.xxhash64("shingle").alias("shingle"))
+    return ngram_jaccard(None, pairs, shingles_df=sh_keyed).where(
+        F.col("jaccard") >= F.lit(float(jaccard_threshold))
+    )
+
+
 def near_dup_clusters(
     docs: DataFrame,
     jaccard_threshold: float = 0.5,
     num_hashes: int = 4,
     bands: int = 2,
     k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     compact: bool = True,
-    max_bucket_size: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
-    """Transitive near-dup clusters: (id, cluster_id = component-min id).
+    """Transitive near-dup clusters: (doc_id, cluster_id = component-min id).
 
     The greedy drop rule (clean_corpus) removes any doc verified against
     a smaller id; clustering is its transitive closure — docs A-B and
     B-C verified makes {A,B,C} ONE cluster even if A-C never collided —
     which is what canonical-selection, dedup accounting and
-    contamination analysis actually need.  Pipeline: shared shingle
-    table (materialized once for signatures + both Jaccard sides, the
-    clean_corpus discipline) -> banded LSH candidates -> Jaccard
-    verification -> alternating-star connected components
+    contamination analysis actually need.  Pipeline: the verified pairs
+    of _verified_pairs -> alternating-star connected components
     (canonicalize.connected_components, the S7 primitive) -> left join
-    back so singleton docs map to themselves.  With `max_bucket_size`
-    the collapsed mega-bucket emits a (bucket-min, member) star whose
-    VERIFIED edges keep the bucket connected through the min; a member
-    pair that fails against the min but would have verified member-
-    member is the same recall trade the greedy rule makes.
+    back so singleton docs map to themselves.
     """
-    from pyspark import StorageLevel
-
     from wikdict_gen_spark.operators import canonicalize as CC
 
-    sh = shingles(docs, id_col=id_col, text_col=text_col, k=k)
-    if materialize:
-        sh = sh.localCheckpoint(
-            eager=False, storageLevel=StorageLevel(True, True, False, False, 1)
-        )
-    sig = minhash_signatures(sh, id_col=id_col, num_hashes=num_hashes,
-                             compact=compact)
-    pairs = lsh_candidate_pairs(sig, id_col=id_col, num_hashes=num_hashes,
-                                bands=bands, max_bucket_size=max_bucket_size)
-    # hashed join keys for the threshold-gated verification (same
-    # rationale + collision analysis as corpus.clean_corpus)
-    sh_keyed = sh.select(id_col, F.xxhash64("shingle").alias("shingle"))
-    verified = ngram_jaccard(None, pairs, id_col=id_col,
-                             shingles_df=sh_keyed).where(
-        F.col("jaccard") >= F.lit(float(jaccard_threshold))
-    )
+    verified = _verified_pairs(docs, jaccard_threshold, num_hashes, bands, k, compact)
     edges = verified.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    mapping = CC.connected_components(edges).withColumnRenamed("node", id_col)
+    mapping = CC.connected_components(edges).withColumnRenamed("node", "doc_id")
     return (
-        docs.select(id_col)
-        .join(mapping, id_col, "left")
+        docs.select("doc_id")
+        .join(mapping, "doc_id", "left")
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("canonical"), F.col(id_col)).alias("cluster_id"),
+            F.col("doc_id"),
+            F.coalesce(F.col("canonical"), F.col("doc_id")).alias("cluster_id"),
         )
     )
 
@@ -356,8 +345,6 @@ def embedding_near_dups(
     n_planes: int = 8,
     n_bands: int = 1,
     dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cosine >= threshold).
 
@@ -381,7 +368,7 @@ def embedding_near_dups(
     """
     from wikdict_gen_spark.operators import similarity as S
 
-    e = embeddings.select(F.col(id_col), F.col(vec_col))
+    e = embeddings.select(F.col("vec_id"), F.col("embedding"))
     if method == "lsh":
         if dim is None:
             raise ValueError("dim is required for method='lsh'")
@@ -393,7 +380,7 @@ def embedding_near_dups(
             band_sigs.append(
                 F.struct(
                     F.lit(b).alias("band"),
-                    S.rp_signature(F.col(vec_col), planes).alias("sig"),
+                    S.rp_signature(F.col("embedding"), planes).alias("sig"),
                 )
             )
         e = e.withColumn("__bs", F.explode(F.array(*band_sigs)))
@@ -403,18 +390,18 @@ def embedding_near_dups(
     else:
         raise ValueError(f"unknown method {method!r}")
     a, b = e.alias("a"), e.alias("b")
-    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    cond = F.col("a.vec_id") < F.col("b.vec_id")
     for k in join_keys:
         cond = cond & k
     pairs = a.join(b, cond)
     cos = S.cosine_expr(
-        F.col(f"a.{vec_col}").cast("array<double>"),
-        F.col(f"b.{vec_col}").cast("array<double>"),
+        F.col("a.embedding").cast("array<double>"),
+        F.col("b.embedding").cast("array<double>"),
     )
     return (
         pairs.select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
             cos.alias("cosine"),
         )
         .where(F.col("cosine") >= float(threshold))
@@ -423,15 +410,14 @@ def embedding_near_dups(
     )
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = 16) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     """SimHash fingerprint: per bit, sign of the sum of token-hash bits.
 
     Uses md5-derived bits (portable).  bits kept small (16) so the oracle
     can mirror it with per-bit SQL aggregation.
     """
     toks = docs.select(
-        F.col(id_col), F.explode(F.split(_norm_text(F.col(text_col)), " ")).alias("tok")
+        F.col("doc_id"), F.explode(F.split(_norm_text(F.col("text")), " ")).alias("tok")
     )
     h = toks.withColumn("hh", F.md5(F.col("tok")))
     # bit i of the token hash = parity of hex nibble i (LSB)
@@ -444,11 +430,11 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         ).alias(f"b{i}")
         for i in range(bits)
     ]
-    sums = h.select(F.col(id_col), *bit_cols).groupBy(id_col).agg(
+    sums = h.select(F.col("doc_id"), *bit_cols).groupBy("doc_id").agg(
         *[F.sum(f"b{i}").alias(f"s{i}") for i in range(bits)]
     )
     sig = sums.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.concat(
             *[F.when(F.col(f"s{i}") > 0, F.lit("1")).otherwise(F.lit("0")) for i in range(bits)]
         ).alias("simhash"),
@@ -459,8 +445,6 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 def incremental_dedup(
     new_docs: DataFrame,
     seen_hashes: DataFrame | None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Dedup an arriving batch against an already-committed corpus: the
     shape every resumable ingest pipeline runs (and the reason
@@ -480,7 +464,7 @@ def incremental_dedup(
     md5 hash so it is uniform by construction (no skew, no salting
     needed).
     """
-    batch = exact_dedup_rows(new_docs, id_col=id_col, text_col=text_col)
+    batch = exact_dedup_rows(new_docs)
     if seen_hashes is None:
         return batch
     return batch.join(
@@ -488,14 +472,14 @@ def incremental_dedup(
     )
 
 
-def _rolling_gram_hashes(text_col: str, k: int):
+def _rolling_gram_hashes(k: int):
     """Array of md5 hashes of the k-token rolling spans of normalized text.
 
     Guards the short-doc case explicitly: sequence(1, 0) is DESCENDING
     [1, 0] in Spark, not empty, and would feed slice() a 0 start —
     documents shorter than k tokens yield an empty array instead.
     """
-    toks = F.split(_norm_text(F.col(text_col)), " ")
+    toks = F.split(_norm_text(F.col("text")), " ")
     return F.when(
         F.size(toks) >= k,
         F.transform(
@@ -507,11 +491,8 @@ def _rolling_gram_hashes(text_col: str, k: int):
 
 def duplicated_span_stats(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 5,
     min_docs: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact-substring duplication signal: per document, how many of its
     k-token spans also occur in >= `min_docs` OTHER-or-same documents —
@@ -525,41 +506,35 @@ def duplicated_span_stats(
     than k tokens report 0 spans / 0.0 frac.
 
     Scale shape (same discipline as webclean.strip_boilerplate_lines):
-    the rolling-gram table is derived in ONE pass and localCheckpoint-
-    materialized because both the frequency aggregation and the per-doc
-    rollup consume it; the shuffle moves 32-byte gram hashes, never span
+    the rolling-gram table is derived in ONE pass and checkpointed,
+    because both the frequency aggregation and the per-doc rollup
+    consume it; the shuffle moves 32-byte gram hashes, never span
     text; the frequent-gram inventory is the heavy tail (template
     sentences shared by thousands of pages), so it broadcasts, and the
     per-doc rollup keys on the skew-free doc id.  dup_span_frac is a
     single exact bigint/bigint double division, so the row sits under
     the hash oracle with no rounding.
     """
-    spans = docs.select(
-        F.col(id_col), F.explode(_rolling_gram_hashes(text_col, k)).alias("gh")
-    )
-    if materialize:
-        from pyspark import StorageLevel
-
-        spans = spans.localCheckpoint(
-            eager=False, storageLevel=StorageLevel(True, True, False, False, 1)
-        )
+    spans = checkpoint(docs.select(
+        F.col("doc_id"), F.explode(_rolling_gram_hashes(k)).alias("gh")
+    ))
     freq = (
         spans.groupBy("gh")
-        .agg(F.countDistinct(id_col).alias("n_docs"))
+        .agg(F.countDistinct("doc_id").alias("n_docs"))
         .where(F.col("n_docs") >= F.lit(int(min_docs)))
     )
     flagged = spans.join(
         F.broadcast(freq.select("gh", F.lit(True).alias("is_dup"))), "gh", "left"
     )
-    per_doc = flagged.groupBy(id_col).agg(
+    per_doc = flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum(F.col("is_dup").isNotNull().cast("long")).alias("n_dup_spans"),
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_spans", F.lit(0)).alias("n_spans"),
             F.coalesce("n_dup_spans", F.lit(0)).alias("n_dup_spans"),
             F.when(F.coalesce("n_spans", F.lit(0)) == 0, F.lit(0.0))
@@ -574,9 +549,6 @@ def duplicated_span_stats(
 def contamination_stats(
     docs: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
     k: int = 6,
     min_hits: int = 1,
     broadcast_inventory: bool = True,
@@ -606,7 +578,7 @@ def contamination_stats(
     """
     inventory = (
         benchmark.select(
-            F.explode(_rolling_gram_hashes(bench_text_col, k)).alias("gh")
+            F.explode(_rolling_gram_hashes(k)).alias("gh")
         )
         .distinct()
         .withColumn("is_hit", F.lit(True))
@@ -614,21 +586,21 @@ def contamination_stats(
     if broadcast_inventory:
         inventory = F.broadcast(inventory)
     spans = docs.select(
-        F.col(id_col), F.explode(_rolling_gram_hashes(text_col, k)).alias("gh")
+        F.col("doc_id"), F.explode(_rolling_gram_hashes(k)).alias("gh")
     )
     per_doc = (
         spans.join(inventory, "gh", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_spans"),
             F.sum(F.col("is_hit").isNotNull().cast("long")).alias("n_contam_spans"),
         )
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_spans", F.lit(0)).alias("n_spans"),
             F.coalesce("n_contam_spans", F.lit(0)).alias("n_contam_spans"),
             F.when(F.coalesce("n_spans", F.lit(0)) == 0, F.lit(0.0))
@@ -643,11 +615,8 @@ def contamination_stats(
 
 def remove_duplicated_spans(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 5,
     min_docs: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact-substring REMOVAL — the destructive twin of
     `duplicated_span_stats`: delete every token covered by a k-token span
@@ -663,7 +632,7 @@ def remove_duplicated_spans(
     Returns (id, n_tokens, n_removed, text_clean); documents shorter
     than k tokens pass through untouched.
 
-    Scale shape: BOTH shared trunks are localCheckpoint-materialized —
+    Scale shape: BOTH shared trunks are checkpointed —
     the tokenized base (consumed by the gram derivation AND the final
     rebuild join, so the corpus parquet is scanned ONCE, not once per
     consumer) and the positional-gram table (consumed by the frequency
@@ -674,15 +643,10 @@ def remove_duplicated_spans(
     one scan and a near-empty join.  Token excision is an array HOF on
     the doc's own row, no token-level shuffle ever exists.
     """
-    toks_expr = F.split(_norm_text(F.col(text_col)), " ")
-    base = docs.select(F.col(id_col), toks_expr.alias("__toks"))
-    if materialize:
-        from pyspark import StorageLevel
-
-        lvl = StorageLevel(True, True, False, False, 1)
-        base = base.localCheckpoint(eager=False, storageLevel=lvl)
-    spans = base.select(
-        F.col(id_col),
+    toks_expr = F.split(_norm_text(F.col("text")), " ")
+    base = checkpoint(docs.select(F.col("doc_id"), toks_expr.alias("__toks")))
+    spans = checkpoint(base.select(
+        F.col("doc_id"),
         F.posexplode(
             F.when(
                 F.size("__toks") >= k,
@@ -694,12 +658,10 @@ def remove_duplicated_spans(
                 ),
             ).otherwise(F.array().cast("array<string>"))
         ).alias("pos0", "gh"),
-    )
-    if materialize:
-        spans = spans.localCheckpoint(eager=False, storageLevel=lvl)
+    ))
     freq = (
         spans.groupBy("gh")
-        .agg(F.countDistinct(id_col).alias("n_docs"))
+        .agg(F.countDistinct("doc_id").alias("n_docs"))
         .where(F.col("n_docs") >= F.lit(int(min_docs)))
         .select("gh")
     )
@@ -708,16 +670,16 @@ def remove_duplicated_spans(
     removed = (
         spans.join(F.broadcast(freq), "gh")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.sequence(F.col("pos0") + 1, F.col("pos0") + k)
             ).alias("ridx"),
         )
         .distinct()
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("ridx").alias("__removed"))
     )
-    joined = base.join(removed, id_col, "left").withColumn(
+    joined = base.join(removed, "doc_id", "left").withColumn(
         "__removed", F.coalesce("__removed", F.array().cast("array<int>"))
     )
     # complement-then-project, NOT a per-token array_contains filter:
@@ -730,7 +692,7 @@ def remove_duplicated_spans(
     )
     kept = F.transform(kept_idx, lambda i: F.element_at("__toks", i))
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("__toks").alias("n_tokens"),
         F.size("__removed").alias("n_removed"),
         F.array_join(kept, " ").alias("text_clean"),
@@ -739,8 +701,6 @@ def remove_duplicated_spans(
 
 def cdc_chunks(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     avg_chunk_tokens: int = 16,
     window: int = 4,
 ) -> DataFrame:
@@ -770,7 +730,7 @@ def cdc_chunks(
     if avg_chunk_tokens < 2:
         raise ValueError("avg_chunk_tokens must be >= 2")
     thresh = rate_to_threshold(1.0 / avg_chunk_tokens)
-    toks = F.split(_norm_text(F.col(text_col)), " ")
+    toks = F.split(_norm_text(F.col("text")), " ")
     n = F.size(toks)
 
     def gate(i):
@@ -793,13 +753,13 @@ def cdc_chunks(
         starts, ends, lambda s, e: F.array_join(F.slice(toks, s, e - s + 1), " ")
     )
     out = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.when(n >= 1, chunks).otherwise(
             F.array().cast("array<string>")
         )).alias("chunk_idx", "__chunk"),
     )
     return out.select(
-        id_col,
+        "doc_id",
         "chunk_idx",
         F.md5("__chunk").alias("chunk_hash"),
         F.size(F.split("__chunk", " ")).alias("n_tokens"),
@@ -808,8 +768,6 @@ def cdc_chunks(
 
 def chunk_dup_stats(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     avg_chunk_tokens: int = 16,
     window: int = 4,
     min_docs: int = 2,
@@ -827,30 +785,25 @@ def chunk_dup_stats(
     inventory, doc-keyed rollup — the duplicated_span_stats shape on a
     16x smaller table.
     """
-    chunks = cdc_chunks(docs, id_col, text_col, avg_chunk_tokens, window)
     # shared-trunk discipline: both the frequency agg and the rollup
     # consume the chunk table — materialize it once
-    from pyspark import StorageLevel
-
-    chunks = chunks.localCheckpoint(
-        eager=False, storageLevel=StorageLevel(True, True, False, False, 1)
-    )
+    chunks = checkpoint(cdc_chunks(docs, avg_chunk_tokens, window))
     freq = (
         chunks.groupBy("chunk_hash")
-        .agg(F.countDistinct(id_col).alias("n_docs"))
+        .agg(F.countDistinct("doc_id").alias("n_docs"))
         .where(F.col("n_docs") >= F.lit(int(min_docs)))
         .select("chunk_hash", F.lit(True).alias("is_dup"))
     )
     per_doc = (
         chunks.join(F.broadcast(freq), "chunk_hash", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_chunks"),
             F.sum(F.col("is_dup").isNotNull().cast("long")).alias("n_dup_chunks"),
         )
     )
     return per_doc.select(
-        id_col,
+        "doc_id",
         "n_chunks",
         "n_dup_chunks",
         (F.col("n_dup_chunks").cast("double") / F.col("n_chunks")).alias(

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 # (/root/reference/src/wdweb.py:7): English stems with Porter, everything
 # else tokenizes plain (lower + whitespace here).
 STEMMED_LANGS = frozenset({"en"})
+# rows per search query (the reference's LIMIT 100)
+_SEARCH_LIMIT = 100
 
 
 def ranked_display_forms(form: DataFrame) -> DataFrame:
@@ -126,7 +128,6 @@ def search_translations(
     token_index: DataFrame,
     queries: DataFrame,
     from_lang: str | None = None,
-    k: int = 100,
 ) -> DataFrame:
     """F8 serving-side search as a batch operator (ref run.py:10-28).
 
@@ -173,7 +174,7 @@ def search_translations(
     )
     return (
         joined.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
+        .where(F.col("rn") <= _SEARCH_LIMIT)
         .select(
             "query_id", "lexentry", "written_rep", "sense_list", "trans_list", "rn"
         )

@@ -1,5 +1,5 @@
-"""Export jobs reading the materialized graph (reference anki_csv/sitemap
-semantics; TEI/XML serialization is deliberately out of scope)."""
+"""Export jobs reading the materialized graph (reference anki_csv
+semantics); the TEI/XML and sitemap sinks are in tei.py."""
 
 from __future__ import annotations
 
@@ -7,19 +7,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# A14 reference constants (tei.py:208-238)
+_GOOD_SCORE = 100.0
+_BASE_COUNT = 1000
+_EXPECTED_GOOD = 45000
+# rows per Anki deck (anki_csv.sh's LIMIT)
+_ANKI_LIMIT = 100
+
+
 def strip_control_chars(col):
     """X12: delete control characters except newline (export hygiene)."""
     return F.regexp_replace(col, r"[\x00-\x09\x0b-\x1f]", "")
 
 
-def adaptive_min_score(simple_translation: DataFrame,
-                       good_score: float = 100.0,
-                       base_count: int = 1000,
-                       expected_good: int = 45000) -> DataFrame:
+def adaptive_min_score(simple_translation: DataFrame) -> DataFrame:
     """A14 adaptive export threshold (one row per lang pair).
 
-    min_score = clamp(round((count(max_score >= good_score) - base_count)
-                            / expected_good * 100), 0, 100)
+    min_score = clamp(round((count(max_score >= _GOOD_SCORE) - _BASE_COUNT)
+                            / _EXPECTED_GOOD * 100), 0, 100)
     — a large dictionary keeps the full score gate, a small one lowers it
     so the export isn't empty (reference /root/reference/src/tei.py:208-238,
     computed there per from-lang database; per lang pair here).
@@ -30,8 +35,8 @@ def adaptive_min_score(simple_translation: DataFrame,
             F.least(
                 F.lit(100),
                 F.round(
-                    (F.count(F.when(F.col("max_score") >= good_score, 1)) - base_count)
-                    / F.lit(float(expected_good)) * 100
+                    (F.count(F.when(F.col("max_score") >= _GOOD_SCORE, 1)) - _BASE_COUNT)
+                    / F.lit(float(_EXPECTED_GOOD)) * 100
                 ).cast("int"),
             ),
         ).cast("double").alias("min_score")
@@ -66,31 +71,23 @@ def top_simple_translations(simple_translation: DataFrame,
     )
 
 
-def anki_export(simple_translation: DataFrame, k: int = 100) -> DataFrame:
+def anki_export(simple_translation: DataFrame) -> DataFrame:
     """Anki deck export with the reference's exact semantics
     (/root/reference/src/anki_csv.sh:1): fixed `max_score >= 100` gate
-    (never the adaptive one), top-k by `rel_importance DESC`, and the
+    (never the adaptive one), top _ANKI_LIMIT by `rel_importance DESC`, and the
     ' | ' separators rewritten to ', ' in trans_list.  written_rep is the
     deterministic tiebreak sqlite leaves unspecified.
     """
     return (
         simple_translation.where(F.col("max_score") >= 100)
         .orderBy(F.col("rel_importance").desc(), F.col("written_rep"))
-        .limit(k)
+        .limit(_ANKI_LIMIT)
         .select(
             strip_control_chars(F.col("written_rep")).alias("written_rep"),
             strip_control_chars(
                 F.replace(F.col("trans_list"), F.lit(" | "), F.lit(", "))
             ).alias("trans_list"),
         )
-    )
-
-
-def sitemap_entries(simple_translation: DataFrame, min_importance: float = 4.0) -> DataFrame:
-    """Sitemap export: vocables above the importance floor."""
-    return (
-        simple_translation.where(F.col("rel_importance") > min_importance)
-        .select("from_lang", "to_lang", "written_rep")
     )
 
 
@@ -117,10 +114,6 @@ def lang_pair_stats(translation: DataFrame, form: DataFrame | None = None) -> Da
             .withColumn("forms", F.coalesce("forms", F.lit(0)))
         )
     return stats
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
 def grouped_json(translation_grouped: DataFrame) -> DataFrame:

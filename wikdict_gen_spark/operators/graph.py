@@ -17,7 +17,7 @@ Execution shape (what survives 100 TB):
   moves.
 * The dangling-mass and node-count scalars are 1-row aggregates crossed
   in (the J10 scalar-subquery discipline) — never a driver collect.
-* Iterative lineage is cut with `localCheckpoint(eager=False)` per
+* Iterative lineage is cut with `partitioning.checkpoint` per
   iteration, the same discipline as canonicalize's connected components:
   without the cut, iteration k's plan contains k copies of the full join
   tree and the optimizer re-executes the whole prefix each time.
@@ -28,20 +28,16 @@ Execution shape (what survives 100 TB):
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_CKPT_LEVEL = StorageLevel(True, True, False, False, 1)
+from wikdict_gen_spark.operators.partitioning import CKPT_LEVEL, checkpoint
 
 
 def pagerank(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    materialize: bool = True,
 ) -> DataFrame:
     """(node, pagerank) after `iterations` power-iteration steps.
 
@@ -54,9 +50,7 @@ def pagerank(
     Parallel edges are intentional weight (two u->v links push twice the
     rank); callers wanting simple-graph semantics pass edges.distinct().
     """
-    edges = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    edges = edges.select("src", "dst")
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -69,21 +63,16 @@ def pagerank(
     # outputPartitioning.  Their lineage is one scan+join deep, so the
     # checkpoint's lineage cut buys nothing here; the cut matters for
     # `pr`, whose lineage grows per iteration.
-    if materialize:
-        nodes = nodes.persist(_CKPT_LEVEL)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    if materialize:
-        # every iteration's dangling anti-join probes deg: unpersisted it
-        # would re-run the edge scan + groupBy once per step (ADVICE r5)
-        deg = deg.persist(_CKPT_LEVEL)
+    nodes = nodes.persist(CKPT_LEVEL)
+    # every iteration's dangling anti-join probes deg: unpersisted it
+    # would re-run the edge scan + groupBy once per step (ADVICE r5)
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist(CKPT_LEVEL)
     # attach degrees once: each iteration then joins a (src, dst, deg)
     # table it never recomputes.  repartition("src") pins hash(src) so
     # every iteration's contribution join exchanges only the rank
     # vector, while the edge table — the side that is 100 TB — never
     # moves again: the Pregel partition-once-iterate-many layout.
-    edges_deg = edges.join(deg, "src")
-    if materialize:
-        edges_deg = edges_deg.repartition("src").persist(_CKPT_LEVEL)
+    edges_deg = edges.join(deg, "src").repartition("src").persist(CKPT_LEVEL)
 
     n = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
     pr = nodes.crossJoin(n).select(
@@ -115,21 +104,19 @@ def pagerank(
                 ).alias("pr"),
             )
         )
-        if materialize:
-            pr = pr.localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL)
+        pr = checkpoint(pr)
     return pr.select("node", F.col("pr").alias("pagerank"))
 
 
-def degree_stats(edges: DataFrame, src_col: str = "src",
-                 dst_col: str = "dst") -> DataFrame:
+def degree_stats(edges: DataFrame) -> DataFrame:
     """(node, out_deg, in_deg) — full outer union of the two one-shuffle
     degree aggregations; absent side coalesces to 0."""
     out_d = (
-        edges.groupBy(F.col(src_col).alias("node"))
+        edges.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("out_deg"))
     )
     in_d = (
-        edges.groupBy(F.col(dst_col).alias("node"))
+        edges.groupBy(F.col("dst").alias("node"))
         .agg(F.count(F.lit(1)).alias("in_deg"))
     )
     return (

@@ -122,11 +122,7 @@ def build_nodes(entry: DataFrame, importance: DataFrame, canonical: DataFrame) -
     return voc_nodes.unionByName(lex_nodes)
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: tuple[str, ...] = ("subj", "pred", "obj"),
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Triple-level diff between two committed KG snapshots: one row per
     triple present in either side, with status 'added' (new only),
     'removed' (old only), or 'kept'.  This is what an incremental
@@ -142,7 +138,7 @@ def snapshot_diff(
     a score change on a kept triple is 'kept' (diff identity, not
     payload; compare payload columns downstream if needed).
     """
-    keys = list(key_cols)
+    keys = ["subj", "pred", "obj"]
     o = old.select(*keys).distinct().withColumn("__in_old", F.lit(True))
     n = new.select(*keys).distinct().withColumn("__in_new", F.lit(True))
     j = o.join(n, keys, "full_outer")

@@ -29,12 +29,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import _norm_text
+from .partitioning import checkpoint
 
 
 def pack_offsets(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_tokens: int = 512,
 ) -> DataFrame:
     """Per document: token count, start offset in the corpus-order
@@ -42,29 +41,25 @@ def pack_offsets(
     it lands in (seq_start..seq_end, documents straddle boundaries by
     design — that is what concatenate-and-chunk means).
 
-    Requires `id_col` to be a unique orderable key (it defines the
+    Requires `doc_id` to be a unique orderable key (it defines the
     concatenation order).  Token counts use the shared dedup
     normalization (lowercase, collapsed whitespace, split on space).
     """
-    n_tok = F.size(F.split(_norm_text(F.col(text_col)), " "))
-    base = docs.select(F.col(id_col), n_tok.alias("n_tokens"))
+    n_tok = F.size(F.split(_norm_text(F.col("text")), " "))
+    base = docs.select(F.col("doc_id"), n_tok.alias("n_tokens"))
 
-    rp = base.repartitionByRange(F.col(id_col)).withColumn(
+    rp = base.repartitionByRange(F.col("doc_id")).withColumn(
         "__pid", F.spark_partition_id()
     )
     w = (
         Window.partitionBy("__pid")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # materialize: the totals collect AND the final output both read this,
     # and pinning the partitioning also removes any chance of the range
     # sampler re-drawing different boundaries between the two passes
-    from pyspark import StorageLevel
-
-    local = rp.withColumn("__local_end", F.sum("n_tokens").over(w)).localCheckpoint(
-        eager=False, storageLevel=StorageLevel(True, True, False, False, 1)
-    )
+    local = checkpoint(rp.withColumn("__local_end", F.sum("n_tokens").over(w)))
 
     # one row per physical partition — bounded by cluster config, not data
     totals = sorted(
@@ -84,10 +79,10 @@ def pack_offsets(
         + F.col("__local_end")
         - F.col("n_tokens")
     ).alias("start_offset")
-    out = joined.select(F.col(id_col), "n_tokens", start)
+    out = joined.select(F.col("doc_id"), "n_tokens", start)
     m = F.lit(float(max_tokens))
     return out.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "start_offset",
         F.floor(F.col("start_offset") / m).cast("long").alias("seq_start"),

@@ -1,4 +1,6 @@
-"""Scan-parallelism guard: widen under-parallel inputs before heavy
+"""Plan shape: the scan-parallelism guard and the one lineage-cut policy.
+
+Scan-parallelism guard: widen under-parallel inputs before heavy
 per-row compute.
 
 A parquet file is splittable only at row-group granularity, so a corpus
@@ -14,7 +16,7 @@ actually under-parallel.
 ``widen_if_narrow`` is that guard (the KG pipeline's pages scan goes
 through it too, wikdict_gen_spark/pipeline.py): if the input's physical
 partition count is below the cluster's core count, round-robin
-repartition to ``factor``× cores; otherwise return the input untouched.
+repartition to twice the core count; otherwise return the input untouched.
 A normally-laid-out corpus (many files / row groups — any real crawl at
 cluster scale) already plans >= cores partitions and skips the shuffle
 entirely, so the guard is scale-adaptive by construction: it costs one
@@ -26,20 +28,43 @@ in this engine (every aggregation orders inside the aggregate; sampling
 gates on content hashes; pack_offsets is range-partition-invariant by
 design), so the round-robin move is results-neutral — the oracle gate
 pins that.
+
+Lineage cut: ``checkpoint`` is the one way the engine cuts a logical plan
+(pipeline fan-out stages, operator trunks read by several consumers,
+iterative loops, the contract's shared derived inputs).
 """
 
 from __future__ import annotations
 
 import itertools
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _OBS_IDS = itertools.count()
+_WIDEN_FACTOR = 2
+
+# memory+disk, serialized (PySpark exposes no _SER constant)
+CKPT_LEVEL = StorageLevel(True, True, False, False, 1)
 
 
-def widen_if_narrow(df: DataFrame, factor: int = 2) -> DataFrame:
-    """Repartition ``df`` to factor*cores iff its physical partition count
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Lazy local checkpoint of ``df`` at ``CKPT_LEVEL``.
+
+    Logical plans are trees, not DAGs: every re-reference of a shared
+    subtree clones and re-executes it, so a frame read by several
+    consumers (or grown by a loop) is cut to a LogicalRDD computed once,
+    on first use (``eager=False``).  The blocks are serialized because
+    checkpointed frames are re-scanned by several consumers, and
+    deserialized row objects make those scans GC-bound (measured ~6% of
+    pipeline wall at 4 cores).
+    """
+    return df.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+
+
+def widen_if_narrow(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to 2*cores iff its physical partition count
     is below the cluster core count.  Plan-time only (no job): the
     partition probe forces physical planning, not execution.
 
@@ -68,7 +93,7 @@ def widen_if_narrow(df: DataFrame, factor: int = 2) -> DataFrame:
     """
     cores = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < cores:
-        return df.repartition(cores * factor).observe(
+        return df.repartition(cores * _WIDEN_FACTOR).observe(
             f"__widen_{next(_OBS_IDS)}", F.count(F.lit(1))
         )
     return df

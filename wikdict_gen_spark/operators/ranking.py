@@ -25,8 +25,6 @@ from wikdict_gen_spark.operators.textstats import _tokens
 def bm25_scores(
     docs: DataFrame,
     query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
@@ -47,23 +45,23 @@ def bm25_scores(
         # Column.isin() with zero arguments dies deep in py4j; surface
         # the caller's mistake at the API boundary instead
         raise ValueError("bm25_scores: query_terms must be non-empty")
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     base = docs.select(
-        F.col(id_col), F.explode(toks).alias("term"),
+        F.col("doc_id"), F.explode(toks).alias("term"),
         F.size(toks).alias("dl"),
     )
     # postings for the query terms only: the isin filter sits under the
     # aggregation, so non-matching tokens never shuffle
     tf = (
         base.where(F.col("term").isin(terms))
-        .groupBy(id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
     )
     stats = docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum(F.size(toks)).cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
-    df_ = tf.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
+    df_ = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     idf = F.log(
         (F.col("n_docs") - F.col("df") + F.lit(0.5))
         / (F.col("df") + F.lit(0.5))
@@ -77,9 +75,9 @@ def bm25_scores(
         tf.join(F.broadcast(df_), "term")
         .crossJoin(F.broadcast(stats))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             (idf * tf_d * F.lit(float(k1) + 1.0) / denom).alias("term_score"),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("term_score").alias("score"))
     )

@@ -39,13 +39,11 @@ def rate_to_threshold(rate: float) -> str:
     return format(scaled, f"0{_FULL}x")
 
 
-def hash_sample(docs: DataFrame, rate: float, key_col: str = "doc_id",
-                salt: str = "sample") -> DataFrame:
+def hash_sample(docs: DataFrame, rate: float) -> DataFrame:
     """Uniform deterministic sample: keep iff the salted md5 prefix falls
-    below the rate threshold.  Changing `salt` draws an independent
-    sample; the same salt always draws the same one."""
+    below the rate threshold; the same rate always draws the same rows."""
     gate = F.substring(
-        F.md5(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string"))),
+        F.md5(F.concat(F.lit("sample:"), F.col("doc_id").cast("string"))),
         1, _FULL,
     )
     return docs.where(gate < F.lit(rate_to_threshold(rate)))
@@ -147,7 +145,6 @@ def temperature_sample(
     target_total: int,
     stratum_col: str = "lang",
     key_col: str = "doc_id",
-    salt: str = "sample",
 ) -> DataFrame:
     """Temperature-balanced mixture sampling in one pass + one gate.
 
@@ -165,5 +162,5 @@ def temperature_sample(
     rates = temperature_rates(counts, temperature, target_total)
     return stratified_sample(
         docs, rates, stratum_col=stratum_col, key_col=key_col,
-        default_rate=0.0, salt=salt,
+        default_rate=0.0,
     )

@@ -28,9 +28,6 @@ from pyspark.sql import functions as F
 
 def sessionize(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
     gap_seconds: int = 1800,
 ) -> DataFrame:
     """Assign each event a per-user session index.
@@ -40,12 +37,12 @@ def sessionize(
     Second-granularity comparison (unix_timestamp) so the SQL oracle's
     date_diff('second') reproduces it exactly.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    prev_ts = F.lag(F.col(ts_col)).over(w)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev_ts = F.lag(F.col("ts")).over(w)
     new_session = F.when(
         prev_ts.isNull()
         | (
-            (F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev_ts))
+            (F.unix_timestamp(F.col("ts")) - F.unix_timestamp(prev_ts))
             > F.lit(int(gap_seconds))
         ),
         F.lit(1),
@@ -60,9 +57,6 @@ def sessionize(
 
 def session_stats(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
     gap_seconds: int = 1800,
 ) -> DataFrame:
     """One row per (user, session): event count, start/end, duration.
@@ -71,12 +65,12 @@ def session_stats(
     aggregation reuses the sessionize shuffle's partitioning (same leading
     key), so AQE plans it without a second exchange.
     """
-    s = sessionize(events, user_col, ts_col, id_col, gap_seconds)
-    return s.groupBy(user_col, "session_idx").agg(
+    s = sessionize(events, gap_seconds)
+    return s.groupBy("user_id", "session_idx").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
         (
-            F.unix_timestamp(F.max(ts_col)) - F.unix_timestamp(F.min(ts_col))
+            F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))
         ).alias("duration_s"),
     )

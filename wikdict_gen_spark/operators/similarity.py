@@ -18,10 +18,12 @@ Three tiers, trading recall for scan cost:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# k-means training: first rows by id, fixed Lloyd iterations
+_TRAIN_SIZE = 4096
+_KMEANS_ITERS = 10
 
 
 def _dot(a, b):
@@ -45,9 +47,6 @@ def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact top-k neighbors per query: broadcast queries × scan, window top-k.
 
@@ -56,22 +55,22 @@ def brute_force_topk(
     the LSH variant.
     """
     q = F.broadcast(
-        queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
+        queries.select(F.col("query_id"), F.col("embedding").alias("__qvec"))
     )
     scored = embeddings.crossJoin(q).select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         cosine_expr(
-            F.col(vec_col).cast("array<double>"), F.col("__qvec").cast("array<double>")
+            F.col("embedding").cast("array<double>"), F.col("__qvec").cast("array<double>")
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -107,9 +106,6 @@ def lsh_topk(
     k: int = 5,
     n_planes: int = 8,
     n_probes: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k: candidates share a random-projection bucket.
 
@@ -123,7 +119,7 @@ def lsh_topk(
     cost is unchanged at any probe count.
     """
     planes = [_hyperplane(p, dim) for p in range(n_planes)]
-    e = embeddings.withColumn("__sig", rp_signature(F.col(vec_col), planes))
+    e = embeddings.withColumn("__sig", rp_signature(F.col("embedding"), planes))
 
     qvec = F.col("__qvec").cast("array<double>")
     dots = F.array(
@@ -161,24 +157,24 @@ def lsh_topk(
         ],
     )
     q = F.broadcast(
-        queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
+        queries.select(F.col("query_id"), F.col("embedding").alias("__qvec"))
         .withColumn("__dots", dots)
         .withColumn("__sig", F.explode(probes))
         .drop("__dots")
     )
-    candidates = e.join(q, "__sig").dropDuplicates([query_id_col, id_col])
+    candidates = e.join(q, "__sig").dropDuplicates(["query_id", "vec_id"])
     scored = candidates.select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         cosine_expr(
-            F.col(vec_col).cast("array<double>"), F.col("__qvec").cast("array<double>")
+            F.col("embedding").cast("array<double>"), F.col("__qvec").cast("array<double>")
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -189,10 +185,6 @@ def lsh_topk(
 def train_ivf_centroids(
     embeddings: DataFrame,
     n_centroids: int = 64,
-    train_size: int = 4096,
-    iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ):
     """Spherical k-means on a bounded, deterministic sample -> centroid
     matrix (numpy, n_centroids x dim, L2-normalized rows).
@@ -201,16 +193,16 @@ def train_ivf_centroids(
     sample is the standard IVF recipe (the model is tiny — KB — and the
     sample is capped regardless of table size, so this is NOT a
     driver-side loop over the data).  Deterministic: the sample is the
-    first `train_size` rows by id, init is every (len/n)-th sample of
+    first _TRAIN_SIZE rows by id, init is every (len/n)-th sample of
     that ordered set, and Lloyd iterations are fixed-count.  Empty cells
     re-seed from the training point farthest from its centroid.
     """
     import numpy as np
 
     rows = (
-        embeddings.select(F.col(id_col), F.col(vec_col))
-        .orderBy(id_col)
-        .limit(train_size)
+        embeddings.select(F.col("vec_id"), F.col("embedding"))
+        .orderBy("vec_id")
+        .limit(_TRAIN_SIZE)
         .collect()
     )
     x = np.asarray([r[1] for r in rows], dtype=np.float64)
@@ -218,7 +210,7 @@ def train_ivf_centroids(
     n = len(x)
     n_centroids = min(n_centroids, n)
     cent = x[:: max(n // n_centroids, 1)][:n_centroids].copy()
-    for _ in range(iters):
+    for _ in range(_KMEANS_ITERS):
         assign = np.argmax(x @ cent.T, axis=1)
         sims = (x * cent[assign]).sum(axis=1)
         for c in range(n_centroids):
@@ -232,8 +224,7 @@ def train_ivf_centroids(
     return cent
 
 
-def _assign_cells(df: DataFrame, cent, vec_col: str, n_probes: int,
-                  out_col: str = "__cell") -> DataFrame:
+def _assign_cells(df: DataFrame, cent, vec_col: str, n_probes: int) -> DataFrame:
     """Attach the n_probes nearest cell ids (array<int>) per row via one
     Arrow-batched matmul — the Python work is O(batch x n_centroids),
     no shuffle, and the centroid matrix ships once per worker via the
@@ -270,7 +261,7 @@ def _assign_cells(df: DataFrame, cent, vec_col: str, n_probes: int,
         order = np.argsort(-sims, axis=1, kind="stable")[:, :probes]
         return pd.Series(list(order.astype("int32")))
 
-    return df.withColumn(out_col, cells(F.col(vec_col)))
+    return df.withColumn("__cell", cells(F.col(vec_col)))
 
 
 def ivf_topk(
@@ -280,9 +271,6 @@ def ivf_topk(
     n_centroids: int = 64,
     n_probes: int = 4,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k via inverted cell lists.
 
@@ -298,29 +286,28 @@ def ivf_topk(
     if centroids is None:
         centroids = train_ivf_centroids(
             embeddings, n_centroids=n_centroids,
-            id_col=id_col, vec_col=vec_col,
         )
-    e = _assign_cells(embeddings, centroids, vec_col, n_probes=1).withColumn(
+    e = _assign_cells(embeddings, centroids, "embedding", n_probes=1).withColumn(
         "__cell", F.element_at("__cell", 1)
     )
     q = _assign_cells(
-        queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec")),
+        queries.select(F.col("query_id"), F.col("embedding").alias("__qvec")),
         centroids, "__qvec", n_probes=n_probes,
     ).withColumn("__cell", F.explode("__cell"))
     candidates = e.join(F.broadcast(q), "__cell").dropDuplicates(
-        [query_id_col, id_col]
+        ["query_id", "vec_id"]
     )
     scored = candidates.select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         cosine_expr(
-            F.col(vec_col).cast("array<double>"),
+            F.col("embedding").cast("array<double>"),
             F.col("__qvec").cast("array<double>"),
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )

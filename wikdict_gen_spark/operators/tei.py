@@ -470,6 +470,10 @@ def render_pair_template(
     return TEI_FILE_DECLARATIONS + head, tail
 
 
+# pairs with fewer headwords are written under small/
+_SMALL_THRESHOLD = 5000
+
+
 def dict_status(headwords: int) -> str:
     # /root/reference/src/tei.py:393-398
     if headwords >= 10000:
@@ -484,8 +488,6 @@ def write_tei(
     out_dir: str,
     today: str,
     language_names: dict[str, str] | None = None,
-    language_codes3: dict[str, str] | None = None,
-    small_threshold: int = 5000,
 ) -> dict[str, int]:
     """Write one TEI file per language pair; returns {pair: headwords}.
 
@@ -512,7 +514,7 @@ def write_tei(
     from wikdict_gen_spark import languages as langreg
 
     names = dict(language_names) if language_names is not None else dict(langreg.LANGUAGE_NAMES)
-    codes3 = dict(language_codes3) if language_codes3 is not None else dict(langreg.LANGUAGE_CODES3)
+    codes3 = dict(langreg.LANGUAGE_CODES3)
 
     # one materialization serves both the count aggregate and the file
     # fan-out (without it the full render plan executes twice)
@@ -525,7 +527,6 @@ def write_tei(
             .collect()
         }
         Path(out_dir).mkdir(parents=True, exist_ok=True)
-        threshold = int(small_threshold)
         # per-pair header/footer rendered driver-side (650 tiny strings);
         # executors only ever stream entry bodies between them
         frames: dict[str, tuple[str, str]] = {}
@@ -566,7 +567,7 @@ def write_tei(
                         key = f"{from_lang}-{to_lang}"
                         headwords = counts[key]
                         header, footer = frames[key]
-                        sub = P(out_dir) / ("small" if headwords < threshold else "")
+                        sub = P(out_dir) / ("small" if headwords < _SMALL_THRESHOLD else "")
                         sub.mkdir(parents=True, exist_ok=True)
                         fname = f"{codes3.get(from_lang, from_lang)}-{codes3.get(to_lang, to_lang)}.tei"
                         final_path = str(sub / fname)
@@ -608,14 +609,16 @@ SITEMAP_TMPL = """<?xml version="1.0" encoding="UTF-8"?>
 {}
 </urlset>"""
 
+# rel_importance floor of a sitemap headword (ref sitemap.py)
+_SITEMAP_MIN_IMPORTANCE = 4.0
+
 SITEMAP_INDEX_TMPL = """<?xml version="1.0" encoding="UTF-8"?>
 <sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
 {}
 </sitemapindex>"""
 
 
-def sitemap_xml(simple_translation: DataFrame, k: int = 100,
-                min_importance: float = 4.0) -> DataFrame:
+def sitemap_xml(simple_translation: DataFrame, k: int = 100) -> DataFrame:
     """One row per lang pair: the rendered sitemap XML body.
 
     Top-k headwords per pair with rel_importance > floor ordered by
@@ -625,7 +628,7 @@ def sitemap_xml(simple_translation: DataFrame, k: int = 100,
     from pyspark.sql import Window
 
     ranked = (
-        simple_translation.where(F.col("rel_importance") > min_importance)
+        simple_translation.where(F.col("rel_importance") > _SITEMAP_MIN_IMPORTANCE)
         .withColumn("__key", F.col("rel_importance") * F.col("max_score"))
         .withColumn(
             "__rn",

@@ -24,19 +24,19 @@ def _tokens(col):
     return F.split(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), " ")
 
 
-def token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_count(docs: DataFrame) -> DataFrame:
     """Whitespace tokens plus a BPE-ish subword estimate (4 chars/token)."""
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     return docs.withColumn("n_tokens", F.size(toks)).withColumn(
         "n_subword_est",
-        F.ceil(F.length(F.regexp_replace(F.col(text_col), r"\s+", "")) / F.lit(4.0)).cast("bigint"),
+        F.ceil(F.length(F.regexp_replace(F.col("text"), r"\s+", "")) / F.lit(4.0)).cast("bigint"),
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Stopword-vote language ID: per language, count token hits in the
     stopword inventory; argmax wins (ties broken by language code)."""
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     scores = [
         F.struct(
             F.size(
@@ -53,10 +53,10 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality in [0,1]: length band, punctuation ratio,
     stopword ratio, mean word length band."""
-    text = F.col(text_col)
+    text = F.col("text")
     toks = _tokens(text)
     n_tok = F.size(toks)
     n_chars = F.length(text)
@@ -76,7 +76,7 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.withColumn("quality", score)
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021, table A1): the
     standard web-corpus filters for boilerplate and degenerate text.
 
@@ -94,7 +94,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Degenerate inputs (empty text, single token) score 0.0 — a short doc
     is not "repetitive", it is short; length lives in quality_score.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     toks = _tokens(text)
     n_tok = F.size(toks)
 
@@ -164,10 +164,10 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text", k: int = 5) -> DataFrame:
+def fingerprint(docs: DataFrame, k: int = 5) -> DataFrame:
     """Document fingerprint: md5 of normalized text (exact) plus a winnowed
     k-gram min-hash (robust to local edits): min md5 over word k-grams."""
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
         lambda i: F.md5(F.array_join(F.slice(toks, i + 1, k), " ")),
@@ -177,8 +177,7 @@ def fingerprint(docs: DataFrame, text_col: str = "text", k: int = 5) -> DataFram
     ).withColumn("fp_winnow", F.array_min(grams))
 
 
-def collocations(docs: DataFrame, text_col: str = "text",
-                 min_count: int = 5) -> DataFrame:
+def collocations(docs: DataFrame, min_count: int = 5) -> DataFrame:
     """Corpus-level bigram collocation mining by pointwise mutual
     information: PMI(a,b) = ln( p(a,b) / (p(a) p(b)) ) with p() estimated
     from corpus bigram/unigram counts.  The standard phrase-detection
@@ -196,7 +195,7 @@ def collocations(docs: DataFrame, text_col: str = "text",
     the long tail (hapax bigrams are most of the distinct mass) out of
     the join entirely.
     """
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     uni = (
         docs.select(F.explode(toks).alias("w"))
         .groupBy("w")

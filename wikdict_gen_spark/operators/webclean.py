@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wikdict_gen_spark.operators.partitioning import checkpoint
+
 # RE2-safe patterns shared by the Spark plan and the DuckDB oracle.
 PII_PATTERNS = {
     # local@domain.tld — the pragmatic crawl-scrubbing shape, not RFC 5322
@@ -42,24 +44,25 @@ PII_PATTERNS = {
     "phone": r"\+\d{1,3}[ -]?\(?\d{1,4}\)?([ -]?\d{2,4}){2,4}",
 }
 PII_TOKEN = {"email": "<EMAIL>", "ipv4": "<IP>", "phone": "<PHONE>"}
+# scrub order: email before ipv4/phone, so a dotted quad inside an email's
+# domain is counted once as email, never double-redacted
+PII_KINDS = ("email", "ipv4", "phone")
 
 
-def split_lines(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """(id, pos, line): trimmed non-empty lines with their original
+def split_lines(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos, line): trimmed non-empty lines with their original
     position — posexplode keeps the order key so reassembly is exact."""
     return (
         docs.select(
-            F.col(id_col),
-            F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "raw"),
+            F.col("doc_id"),
+            F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "raw"),
         )
-        .select(F.col(id_col), "pos", F.trim(F.col("raw")).alias("line"))
+        .select(F.col("doc_id"), "pos", F.trim(F.col("raw")).alias("line"))
         .where(F.col("line") != "")
     )
 
 
-def frequent_lines(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", min_docs: int = 4) -> DataFrame:
+def frequent_lines(docs: DataFrame, min_docs: int = 4) -> DataFrame:
     """(line_hash, n_docs) for every line appearing in >= `min_docs`
     DISTINCT documents — the boilerplate inventory.
 
@@ -68,22 +71,19 @@ def frequent_lines(docs: DataFrame, id_col: str = "doc_id",
     standard two-phase expand/partial-agg, so no single reducer sees a
     hot line's full row set.
     """
-    lines = split_lines(docs, id_col, text_col)
+    lines = split_lines(docs)
     return (
-        lines.select(F.md5(F.col("line")).alias("line_hash"), F.col(id_col))
+        lines.select(F.md5(F.col("line")).alias("line_hash"), F.col("doc_id"))
         .groupBy("line_hash")
-        .agg(F.countDistinct(id_col).alias("n_docs"))
+        .agg(F.countDistinct("doc_id").alias("n_docs"))
         .where(F.col("n_docs") >= F.lit(int(min_docs)))
     )
 
 
 def strip_boilerplate_lines(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_docs: int = 4,
     boilerplate: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Remove every line that `frequent_lines` classifies as boilerplate
     and reassemble each document's remaining lines in original order.
@@ -95,30 +95,21 @@ def strip_boilerplate_lines(
     incremental/multi-shard path) — with a supplied inventory the whole
     operator is a single corpus pass.
 
-    Plan shape: the exploded line table is derived ONCE and (when the
-    inventory must be computed here) localCheckpoint-materialized — the
-    corpus.py fan-out discipline, since both the inventory aggregation
-    and the strip consume it, and an unmaterialized shared subtree would
-    re-run the explode per consumer.  The strip itself is a broadcast
+    Plan shape: the exploded line table is derived ONCE and, when the
+    inventory must be computed here, checkpointed: both the inventory
+    aggregation and the strip consume it, and an unmaterialized shared
+    subtree would re-run the explode per consumer.  The strip itself is a broadcast
     LEFT join (boilerplate flag) folded into ONE groupBy(doc) that
     filters inside the aggregation — kept text, kept count and removed
     count come out of the same shuffle, so no second per-doc pass and no
     join of two aggregates.  The final right join against the id-only
     projection restores zero-line documents; it reads one pruned column.
     """
-    lines = split_lines(docs, id_col, text_col).withColumn(
-        "line_hash", F.md5(F.col("line"))
-    )
+    lines = split_lines(docs).withColumn("line_hash", F.md5(F.col("line")))
     if boilerplate is None:
-        if materialize:
-            from pyspark import StorageLevel
-
-            lines = lines.localCheckpoint(
-                eager=False,
-                storageLevel=StorageLevel(True, True, False, False, 1),
-            )
+        lines = checkpoint(lines)
         boilerplate = lines.groupBy("line_hash").agg(
-            F.countDistinct(id_col).alias("n_docs")
+            F.countDistinct("doc_id").alias("n_docs")
         ).where(F.col("n_docs") >= F.lit(int(min_docs)))
     # the inventory is the heavy-hitter set: small by construction -> broadcast
     flagged = lines.join(
@@ -129,7 +120,7 @@ def strip_boilerplate_lines(
         "left",
     )
     keep = F.col("is_boiler").isNull()
-    reassembled = flagged.groupBy(id_col).agg(
+    reassembled = flagged.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.filter(
@@ -146,30 +137,28 @@ def strip_boilerplate_lines(
         F.sum((~keep).cast("long")).alias("n_lines_removed"),
     )
     return (
-        docs.select(id_col)
-        .join(reassembled, id_col, "left")
+        docs.select("doc_id")
+        .join(reassembled, "doc_id", "left")
         .select(
-            id_col,
-            F.coalesce("clean_text", F.lit("")).alias(text_col),
+            "doc_id",
+            F.coalesce("clean_text", F.lit("")).alias("text"),
             F.coalesce("n_lines_kept", F.lit(0)).alias("n_lines_kept"),
             F.coalesce("n_lines_removed", F.lit(0)).alias("n_lines_removed"),
         )
     )
 
 
-def pii_scrub(docs: DataFrame, text_col: str = "text",
-              kinds: tuple[str, ...] = ("email", "ipv4", "phone")) -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """Replace PII spans with typed tokens and count what was redacted.
 
-    Adds `text_scrubbed` plus one `n_<kind>` column per requested kind.
-    Order matters: email before ipv4/phone so a dotted quad inside an
-    email's domain is counted once as email, never double-redacted.
+    Adds `text_scrubbed` plus one `n_<kind>` column per PII_KINDS entry,
+    scrubbed in that order.
     Pure regexp_replace/regexp_count column arithmetic — fuses into the
     scan, no shuffle, no Python.
     """
     out = docs
-    scrubbed = F.col(text_col)
-    for kind in kinds:
+    scrubbed = F.col("text")
+    for kind in PII_KINDS:
         pat = PII_PATTERNS[kind]
         out = out.withColumn(
             f"n_{kind}", F.regexp_count(scrubbed, F.lit(pat)).cast("bigint")
@@ -185,9 +174,7 @@ TRACKING_PARAM_PREFIX = "utm_"
 TRACKING_PARAMS = ("gclid", "fbclid", "msclkid", "mc_eid", "ref")
 
 
-def canonicalize_urls(
-    pages: DataFrame, url_col: str = "url", out_col: str = "canonical_url"
-) -> DataFrame:
+def canonicalize_urls(pages: DataFrame) -> DataFrame:
     """URL canonicalization — the normalization pass that makes crawl-level
     URL dedup work: the same resource arrives as
     `HTTPS://WWW.Site.COM:443/a/?utm_source=x#top` and
@@ -207,9 +194,10 @@ def canonicalize_urls(
 
     Rows whose value does not parse as scheme://... pass through
     trimmed-but-otherwise-untouched (crawls carry garbage; dropping it is
-    a filter's decision, not a normalizer's).  Adds `out_col` and `host`.
+    a filter's decision, not a normalizer's).  Adds `canonical_url` and
+    `host`.
     """
-    u = F.regexp_replace(F.trim(F.col(url_col)), r"#.*$", "")
+    u = F.regexp_replace(F.trim(F.col("url")), r"#.*$", "")
     scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
     hostport = F.lower(
         F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1)
@@ -244,13 +232,11 @@ def canonicalize_urls(
         F.when(kept == "", F.lit("")).otherwise(F.concat(F.lit("?"), kept)),
     )
     return pages.withColumn(
-        out_col, F.when(scheme == "", F.trim(F.col(url_col))).otherwise(canon)
+        "canonical_url", F.when(scheme == "", F.trim(F.col("url"))).otherwise(canon)
     ).withColumn("host", host)
 
 
-def host_stats(
-    pages: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def host_stats(pages: DataFrame) -> DataFrame:
     """Per-host crawl rollup over CANONICAL urls: page count, distinct
     resources, and the URL-level duplicate rate (the mass a url-dedup
     pass removes — tracking-param churn and fragment noise, which is why
@@ -261,7 +247,7 @@ def host_stats(
     spread across its distinct urls until the final per-host merge, where
     AQE's skew handling applies.  dup_rate is exact bigint/bigint.
     """
-    c = canonicalize_urls(pages, url_col)
+    c = canonicalize_urls(pages)
     n = F.count(F.lit(1))
     return (
         c.groupBy("host")

@@ -21,13 +21,12 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from wikdict_gen_spark.catalog import Catalog
 from wikdict_gen_spark.operators import canonicalize, generic, infer, materialize, process
 from wikdict_gen_spark.operators.extract import extract_text, parse_records, read_pages, records
-from wikdict_gen_spark.operators.partitioning import widen_if_narrow
+from wikdict_gen_spark.operators.partitioning import checkpoint, widen_if_narrow
 
 # Stages referenced by 2+ downstream consumers.  In fused mode these are
 # the ONLY lineage-cut points: a re-referenced stage must be checkpointed
@@ -53,11 +52,6 @@ FANOUT_STAGES = frozenset({
     "indirect",           # fuse union + anti-join key projection
     "infer",              # infer_grouped, simple_translation, kg_edges
 })
-
-# memory+disk, serialized (PySpark exposes no _SER constant): checkpointed
-# stages are re-scanned by several consumers, and deserialized row objects
-# make those scans GC-bound (measured ~6% pipeline wall at 4 cores)
-_CKPT_LEVEL = StorageLevel(True, True, False, False, 1)
 
 
 def _kg_edges(s: dict) -> DataFrame:
@@ -184,7 +178,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, workdir: str,
         if fused:
             df = build(out)
             if name in FANOUT_STAGES:
-                df = df.localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL)
+                df = checkpoint(df)
             out[name] = df
         else:
             out[name] = cat.ensure(name, partial(build, out), partition_by)

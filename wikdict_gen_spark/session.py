@@ -36,6 +36,17 @@ def host_resources() -> tuple[int, int]:
     )
 
 
+def _cpus(env: Mapping[str, str], host_cpus: int) -> int:
+    value = env.get("SPARK_GRAFT_CPUS")
+    if value is None:
+        return host_cpus
+    if not re.fullmatch(r"\s*\d+\s*", value) or int(value) < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS={value!r}: expected a positive integer"
+        )
+    return int(value)
+
+
 def _driver_mem(env: Mapping[str, str], ram: int) -> str:
     value = env.get("SPARK_GRAFT_DRIVER_MEM")
     if value is None:
@@ -46,6 +57,8 @@ def _driver_mem(env: Mapping[str, str], ram: int) -> str:
             f"SPARK_GRAFT_DRIVER_MEM={value!r}: expected <n>g or <n>m"
         )
     mem = int(m.group(1)) * (2**30 if m.group(2) == "g" else 2**20)
+    if mem == 0:
+        raise ValueError(f"SPARK_GRAFT_DRIVER_MEM={value!r}: the heap cannot be zero")
     if mem > ram:
         raise ValueError(
             f"SPARK_GRAFT_DRIVER_MEM={value!r} exceeds the host's "
@@ -63,11 +76,12 @@ def session_conf(
     """The Spark conf ``get_spark`` launches with; no JVM is started.
 
     ``host`` is (CPUs, RAM bytes), default ``host_resources()``.  Raises
-    ValueError for a driver memory that does not parse or exceeds RAM,
-    so misconfiguration fails here rather than at JVM launch.
+    ValueError for a core count that is not a positive integer and for a
+    driver memory that does not parse, is zero or exceeds RAM, so
+    misconfiguration fails here rather than at JVM launch.
     """
     host_cpus, ram = host or host_resources()
-    cpus = parallelism or int(env.get("SPARK_GRAFT_CPUS", host_cpus))
+    cpus = parallelism or _cpus(env, host_cpus)
     conf = {
         "spark.master": f"local[{cpus}]",
         "spark.driver.memory": _driver_mem(env, ram),

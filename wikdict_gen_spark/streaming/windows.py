@@ -18,8 +18,6 @@ def windowed_event_stats(
     events_stream: DataFrame,
     window: str = "1 hour",
     watermark: str = "2 hours",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
 ) -> DataFrame:
     """Per (window, key): event count plus min/max of user and value.
 
@@ -33,8 +31,8 @@ def windowed_event_stats(
     watermark can be asserted batch by batch.
     """
     return (
-        events_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), key_col)
+        events_stream.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("user_id").alias("min_user"),
@@ -44,7 +42,7 @@ def windowed_event_stats(
         )
         .select(
             F.col("w.start").alias("window_start"),
-            key_col,
+            "event_type",
             "n_events",
             "min_user",
             "max_user",
