@@ -40,7 +40,7 @@ from wikdict_gen_spark.operators import webclean as WC
 # DataFrame object for repeated requests, which (a) lets one query
 # reference a table twice without tripping Spark's duplicate-CollectMetrics
 # check on the widened reads (same-instance reuse is the allowed case),
-# (b) keeps the warm and timed bench builds of a query plan-identical, so
+# (b) keeps repeated builds of a query in one session plan-identical, so
 # CacheManager matching of persisted subtrees (pagerank's loop invariants)
 # behaves as it did before the widening existed, and (c) computes each
 # checkpointed derived input once per session: without the lineage cut

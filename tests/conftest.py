@@ -3,14 +3,14 @@ import shutil
 
 import pytest
 
-os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # keep test JVM small
+os.environ["SPARK_GRAFT_CPUS"] = "4"  # keep test JVM small
 
 
 @pytest.fixture(scope="session")
 def spark():
     from wikdict_gen_spark.session import get_spark
 
-    s = get_spark(parallelism=4, app_name="tests", shuffle_partitions=4)
+    s = get_spark(app_name="tests")
     yield s
     s.stop()
 

@@ -6,15 +6,17 @@
 - every defaulted parameter of a public function under wikdict_gen_spark/
   is passed by some call in the repo (tests and perfbench/ included);
   one that no caller sets is a constant, not an option;
-- the checkpoint storage level is built in one place.
+- the checkpoint storage level is built in one place;
+- only the session module reads the ``SPARK_GRAFT_*`` settings, so no
+  script grows a private env knob or a second parse of the core count.
 """
 
 import ast
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-ENTRY_POINTS = ["__spark_entry__.py", "wikdict_gen_spark/pipeline.py", "bench.py",
-                "bench_extra.py", "scripts/verify_entry.py"]
+ENTRY_POINTS = ["__spark_entry__.py", "wikdict_gen_spark/pipeline.py",
+                "perfbench/run.py", "perfbench/worker.py", "scripts/verify_entry.py"]
 
 
 def _module(path: Path) -> str:
@@ -131,3 +133,14 @@ def test_storage_level_built_in_one_place():
         if isinstance(node, ast.Call) and _call_name(node) == "StorageLevel"
     )
     assert not sites, f"StorageLevel( outside partitioning.py: {sites}"
+
+
+def test_env_settings_read_only_by_the_session():
+    allowed = ROOT / "wikdict_gen_spark" / "session.py"
+    exempt = (ROOT / "tests", ROOT / "perfbench")
+    readers = sorted(
+        str(p.relative_to(ROOT)) for p in _sources()
+        if p != allowed and not any(d in p.parents for d in exempt)
+        and "SPARK_GRAFT_" in p.read_text()
+    )
+    assert not readers, f"SPARK_GRAFT_ settings outside session.py: {readers}"

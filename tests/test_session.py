@@ -32,10 +32,9 @@ def test_overrides():
     assert conf["spark.master"] == "local[2]"
     assert conf["spark.driver.memory"] == "3072m"
     assert conf["spark.local.dir"] == "/tmp/spark-local"
-    # an explicit parallelism wins over the env
-    conf = session_conf(8, 16, env=env, host=(4, 15 * GB))
-    assert conf["spark.master"] == "local[8]"
-    assert conf["spark.sql.shuffle.partitions"] == "16"
+    # the core count also sets the shuffle and default parallelism
+    assert conf["spark.sql.shuffle.partitions"] == "2"
+    assert conf["spark.default.parallelism"] == "2"
 
 
 @pytest.mark.parametrize("mem", ["lots", "2048000k", "6 gb", "", "0g", "0m"])

@@ -8,7 +8,7 @@ extraction invariant and are ported verbatim as data.
 
 import pytest
 
-from wikdict_gen_spark.functions import (
+from wikdict_gen_spark.functions.textclean import (
     clean_html,
     clean_inflection,
     clean_wiki_syntax,

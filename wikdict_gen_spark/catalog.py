@@ -21,7 +21,6 @@ import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class Catalog:

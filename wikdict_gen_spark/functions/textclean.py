@@ -205,18 +205,6 @@ def strip_gloss_trailer(value: str) -> str:
 
 # --- identifiers -----------------------------------------------------------
 
-_RE_NAMESPACE = re.compile(r"^(?:http://kaiko\.getalp\.org/dbnary/|http://.*#)")
-
-
-def strip_namespace(uri: str) -> str:
-    """Drop the RDF namespace prefix from entity URIs."""
-    return _RE_NAMESPACE.sub("", uri)
-
-
-def repair_bad_bytes(value: str) -> str:
-    """Replace unencodable characters (lone surrogates etc.) with U+FFFD-style '?'."""
-    return value.encode("utf-8", "replace").decode()
-
 
 def surface_guess(vocable: str) -> str:
     """Vocable id -> guessed surface form: drop the 4-char lang prefix, '_' -> ' '.

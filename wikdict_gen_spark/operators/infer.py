@@ -213,30 +213,8 @@ def direct_reverse(all_trans: DataFrame) -> DataFrame:
     )
 
 
-def composable_keys(all_trans: DataFrame) -> DataFrame:
-    """The indirect key set — distinct (from, to) pairs reachable by 2-hop
-    composition — computed WITHOUT the full composition join: both sides
-    reduce to distinct pivot-incident key pairs first, so this join is over
-    two small deduped relations and never re-evaluates the scored plan."""
-    a = all_trans.select(
-        "from_lang",
-        "from_vocable",
-        F.col("to_lang").alias("p_lang"),
-        F.col("to_vocable").alias("p_voc"),
-    ).distinct()
-    b = all_trans.select(
-        F.col("from_lang").alias("p_lang"),
-        F.col("from_vocable").alias("p_voc"),
-        "to_lang",
-        "to_vocable",
-    ).distinct()
-    return a.join(b, ["p_lang", "p_voc"]).select(*_EDGE_KEYS).distinct()
-
-
 def fuse_evidence(
-    all_trans: DataFrame,
-    backlink: DataFrame | None = None,
-    indirect_df: DataFrame | None = None,
+    all_trans: DataFrame, backlink: DataFrame, indirect_df: DataFrame
 ) -> DataFrame:
     """Union direct/indirect/reverse evidence and fuse per candidate edge.
 
@@ -245,19 +223,10 @@ def fuse_evidence(
     scores and collects sources per (langs, lexentry, sense, vocable pair,
     importances); source lists are sorted for determinism.
 
-    The anti-join probe never references the scored composition subtree:
-    when indirect_df is a materialized snapshot its key projection is used
-    directly; when indirect is computed lazily here, the probe keys come
-    from ``composable_keys`` (same set, computed over deduped key pairs) so
-    the expensive composition plan is evaluated exactly once.
+    ``backlink`` is not read here: its scores reach fusion through
+    ``indirect_df``.
     """
-    backlink = backlink if backlink is not None else backlink_score(all_trans)
-    lazy_indirect = indirect_df is None
-    if lazy_indirect:
-        indirect_df = indirect(all_trans, backlink)
-    ind_keys = (
-        composable_keys(all_trans) if lazy_indirect else indirect_df.select(*_EDGE_KEYS)
-    )
+    ind_keys = indirect_df.select(*_EDGE_KEYS)
     probe_keys = all_trans.select(*_EDGE_KEYS).unionByName(ind_keys).distinct()
     with_lexentry = direct(all_trans).unionByName(indirect_df)
     reverse_only = direct_reverse(all_trans).join(probe_keys, _EDGE_KEYS, "left_anti")

@@ -86,7 +86,7 @@ def widen_if_narrow(df: DataFrame) -> DataFrame:
     instance, so callers that read one input several times must reuse
     the returned frame rather than re-wrap (the entry reader memoizes
     per (application, sf_dir, table) for exactly this reason — which
-    also keeps warm and timed bench builds plan-identical, preserving
+    also keeps repeated builds of a query plan-identical, preserving
     CacheManager matching of persisted subtrees: per-call-distinct
     plans cost q_pagerank's loop-invariant cache hits, measured
     2.2s -> 5.1s).

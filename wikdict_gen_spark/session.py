@@ -1,8 +1,9 @@
 """SparkSession construction: one ``local[k]`` session sized from the host.
 
-One place to set every knob so tests, bench and the pipeline run the same
-configuration.  Cores and driver memory default to what the host has;
-three deployment settings override them:
+One place to set every knob so the tests, the pipeline, the contract
+queries and the benchmark run the same configuration.  Cores and driver
+memory default to what the host has; three deployment settings override
+them:
 
 - ``SPARK_GRAFT_CPUS``: local core count (default: the CPUs this process
   may run on);
@@ -68,8 +69,6 @@ def _driver_mem(env: Mapping[str, str], ram: int) -> str:
 
 
 def session_conf(
-    parallelism: int | None = None,
-    shuffle_partitions: int | None = None,
     env: Mapping[str, str] = os.environ,
     host: tuple[int, int] | None = None,
 ) -> dict[str, str]:
@@ -81,7 +80,7 @@ def session_conf(
     misconfiguration fails here rather than at JVM launch.
     """
     host_cpus, ram = host or host_resources()
-    cpus = parallelism or _cpus(env, host_cpus)
+    cpus = _cpus(env, host_cpus)
     conf = {
         "spark.master": f"local[{cpus}]",
         "spark.driver.memory": _driver_mem(env, ram),
@@ -94,7 +93,9 @@ def session_conf(
         # default compresses them): they are re-read by every consumer of a
         # checkpointed stage and by the session-memoized query trunks
         "spark.rdd.compress": "false",
-        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
+        # at sandbox data sizes more partitions than cores only add
+        # scheduling overhead
+        "spark.sql.shuffle.partitions": str(cpus),
         "spark.default.parallelism": str(cpus),
         # Arrow is the transport for every pandas UDF in the engine
         "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -120,20 +121,14 @@ def session_conf(
 
 
 def get_spark(
-    parallelism: int | None = None,
     app_name: str = "wikdict_gen_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession.
+    """Build (or fetch) a SparkSession with ``session_conf()``'s settings.
 
-    parallelism: local core count; default $SPARK_GRAFT_CPUS, else the
-    host's usable CPUs.
-    shuffle_partitions: defaults to the core count — at sandbox data sizes
-    more partitions only add scheduling overhead.
     extra_conf: Spark settings applied last, over the defaults.
     """
-    conf = {**session_conf(parallelism, shuffle_partitions), **(extra_conf or {})}
+    conf = {**session_conf(), **(extra_conf or {})}
     builder = SparkSession.builder.appName(app_name)
     for k, v in conf.items():
         builder = builder.config(k, v)
