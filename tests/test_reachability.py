@@ -16,7 +16,10 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 ENTRY_POINTS = ["__spark_entry__.py", "wikdict_gen_spark/pipeline.py",
-                "perfbench/run.py", "perfbench/worker.py", "scripts/verify_entry.py"]
+                "perfbench/run.py", "perfbench/worker.py", "scripts/verify_entry.py",
+                # no import names it: the JVM launches it by name
+                # (spark.python.daemon.module)
+                "wikdict_gen_spark/udf_daemon.py"]
 
 
 def _module(path: Path) -> str:

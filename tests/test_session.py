@@ -1,5 +1,7 @@
 """Host-derived session defaults, checked without starting a JVM."""
 
+from pathlib import Path
+
 import pytest
 
 from wikdict_gen_spark.session import session_conf
@@ -17,6 +19,10 @@ def test_small_host_defaults():
     assert "AlwaysPreTouch" not in opts
     assert "-XX:ReservedCodeCacheSize=1g" in opts
     assert "spark.local.dir" not in conf
+    assert conf["spark.python.daemon.module"] == "wikdict_gen_spark.udf_daemon"
+    # the JVM finds the daemon module whatever the driver's working directory
+    daemon = Path(conf["spark.executorEnv.PYTHONPATH"]) / "wikdict_gen_spark/udf_daemon.py"
+    assert daemon.is_file()
 
 
 def test_large_host_defaults():

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from wikdict_gen_spark.functions import vectorized as vec
 
@@ -25,9 +25,15 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return vec.clean_html_series(vec.decode_utf8_series(html))
 
 
-@pandas_udf(StringType())
-def clean_html_udf(s: pd.Series) -> pd.Series:
-    return vec.clean_html_series(s)
+@pandas_udf(StructType([StructField("full", StringType()), StructField("clean", StringType())]))
+def clean_form_udf(s: pd.Series, lang: pd.Series) -> pd.DataFrame:
+    """Inflected form -> (markup-free form, form without de pronoun/article).
+
+    Both cleanings run in one Python pass, so each form batch crosses the
+    Arrow boundary once.
+    """
+    full = vec.clean_wiki_syntax_series(vec.clean_html_series(s))
+    return pd.DataFrame({"full": full, "clean": vec.clean_inflection_series(full, lang)})
 
 
 @pandas_udf(StringType())
@@ -43,11 +49,6 @@ def parse_sense_udf(sense: pd.Series, lang: pd.Series) -> pd.Series:
 @pandas_udf(StringType())
 def sense_num_udf(s: pd.Series) -> pd.Series:
     return vec.sense_num_series(s)
-
-
-@pandas_udf(StringType())
-def clean_inflection_udf(s: pd.Series, lang: pd.Series) -> pd.Series:
-    return vec.clean_inflection_series(s, lang)
 
 
 @pandas_udf(StringType())

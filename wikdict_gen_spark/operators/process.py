@@ -26,8 +26,7 @@ from pyspark.sql import functions as F
 
 from wikdict_gen_spark import constants as C
 from wikdict_gen_spark.functions.spark_udfs import (
-    clean_html_udf,
-    clean_inflection_udf,
+    clean_form_udf,
     clean_wiki_syntax_udf,
     parse_sense_udf,
     sense_num_udf,
@@ -98,22 +97,21 @@ def make_form(raw_form: DataFrame) -> DataFrame:
     The rank inventory is tiny (broadcast); the join predicate is NULL-safe
     equality over all 8 grammatical features plus language.
     """
-    spark = raw_form.sparkSession
-    rank_rows = [
-        {**{f: None for f in _INFL_FEATURES}, **r, "lang": lang}
+    # a literal relation, so no Python worker starts to ship 13 rows
+    ranks = raw_form.sparkSession.tvf.inline(F.array(*[
+        F.struct(
+            F.lit(lang).alias("lang"),
+            F.lit(r["rank"]).alias("rank"),
+            *[F.lit(r.get(f)).cast("string").alias(f) for f in _INFL_FEATURES],
+        )
         for lang, rows in INFLECTION_RANKS.items()
         for r in rows
-    ]
-    ranks = spark.createDataFrame(
-        [[r["lang"], r["rank"]] + [r[f] for f in _INFL_FEATURES] for r in rank_rows],
-        schema="lang string, rank int, " + ", ".join(f"`{f}` string" for f in _INFL_FEATURES),
-    )
-    cleaned = raw_form.withColumn(
-        "other_written_full",
-        clean_wiki_syntax_udf(clean_html_udf(F.col("other_written"))),
-    ).withColumn(
-        "other_written_clean",
-        clean_inflection_udf(F.col("other_written_full"), F.col("lang")),
+    ]))
+    cleaned = (
+        raw_form.withColumn("_form", clean_form_udf(F.col("other_written"), F.col("lang")))
+        .withColumn("other_written_full", F.col("_form.full"))
+        .withColumn("other_written_clean", F.col("_form.clean"))
+        .drop("_form")
     )
     pred = cleaned["lang"] == ranks["lang"]
     for f in _INFL_FEATURES:

@@ -48,7 +48,6 @@ FANOUT_STAGES = frozenset({
     "importance",         # translation_base, translation, simple_translation, kg_nodes
     "translation_base",   # hot-key detection scan + the link join itself
     "all_trans",          # backlink, indirect, direct/reverse/probe in fuse
-    "backlink",           # indirect, fuse_evidence
     "indirect",           # fuse union + anti-join key projection
     "infer",              # infer_grouped, simple_translation, kg_edges
 })

@@ -28,6 +28,8 @@ from pyspark.sql import SparkSession
 # process memory on a 15 GB host; 40% leaves room for the Python workers.
 DRIVER_MEM_SHARE = 0.4
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def host_resources() -> tuple[int, int]:
     """(usable CPUs, physical RAM in bytes) of this host."""
@@ -99,6 +101,11 @@ def session_conf(
         "spark.default.parallelism": str(cpus),
         # Arrow is the transport for every pandas UDF in the engine
         "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Python workers fork from a daemon that has the UDF imports loaded;
+        # the JVM starts it with `python -m`, so this package's root goes on
+        # the workers' path whatever the driver's working directory
+        "spark.python.daemon.module": "wikdict_gen_spark.udf_daemon",
+        "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
         # deterministic sessions: no timezone surprises in timestamp columns
         "spark.sql.session.timeZone": "UTC",
         # long pipelines: reclaim broadcast/shuffle state promptly
