@@ -6,7 +6,8 @@
 - every defaulted parameter of a public function under wikdict_gen_spark/
   is passed by some call in the repo (tests and perfbench/ included);
   one that no caller sets is a constant, not an option;
-- the checkpoint storage level is built in one place;
+- the checkpoint storage level is built, and a lineage cut made, in one
+  place;
 - only the session module reads the ``SPARK_GRAFT_*`` settings, so no
   script grows a private env knob or a second parse of the core count.
 """
@@ -130,12 +131,13 @@ def test_storage_level_built_in_one_place():
     allowed = ROOT / "wikdict_gen_spark" / "operators" / "partitioning.py"
     files = [*(ROOT / "wikdict_gen_spark").rglob("*.py"), ROOT / "__spark_entry__.py"]
     sites = sorted(
-        f"{p.relative_to(ROOT)}:{node.lineno}"
+        f"{p.relative_to(ROOT)}:{node.lineno} {_call_name(node)}("
         for p in files if p != allowed
         for node in ast.walk(ast.parse(p.read_text()))
-        if isinstance(node, ast.Call) and _call_name(node) == "StorageLevel"
+        if isinstance(node, ast.Call)
+        and _call_name(node) in ("StorageLevel", "localCheckpoint")
     )
-    assert not sites, f"StorageLevel( outside partitioning.py: {sites}"
+    assert not sites, f"StorageLevel( or localCheckpoint( outside partitioning.py: {sites}"
 
 
 def test_env_settings_read_only_by_the_session():

@@ -59,9 +59,6 @@ class Catalog:
         tmp.rename(final)
         self._record_metrics(name, time.monotonic() - t0)
         self._marker(name).touch()
-        # stage boundaries are also cache boundaries: drop persisted hot-key
-        # sets / checkpoint RDDs so long pipelines don't accumulate heap debris
-        self.spark.catalog.clearCache()
         return self.read(name)
 
     def ensure(self, name: str, build, partition_by: list[str] | None = None) -> DataFrame:

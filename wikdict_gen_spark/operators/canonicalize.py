@@ -3,8 +3,10 @@
 Large-star/small-star (alternating star contraction) over alias/synonym
 edges.  Catalyst cannot express iteration, so this is a driver-side loop
 over DataFrames with:
-- per-iteration localCheckpoint to cut lineage (plan explosion otherwise),
-- convergence detection by edge-set checksum (count + hash sum), cheap and
+- a per-iteration ``partitioning.checkpoint`` to cut lineage (plan
+  explosion otherwise); the lazy cut is computed and stored by the same
+  job as the iteration's checksum,
+- convergence detection by edge-set checksum (count + hash xor), cheap and
   safe against the usual count-only false convergence,
 - an iteration cap with a hard error rather than silent truncation.
 
@@ -16,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .partitioning import checkpoint
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -70,11 +74,10 @@ def connected_components(edges: DataFrame) -> DataFrame:
         .unionByName(edges.select(F.col("v").alias("node")))
         .distinct()
     )
-    cur = edges.select("u", "v").where(F.col("u") != F.col("v")).distinct()
-    cur = cur.localCheckpoint(eager=True)
+    cur = checkpoint(edges.select("u", "v").where(F.col("u") != F.col("v")).distinct())
     prev_sig = None
     for _ in range(_MAX_ITERATIONS):
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+        cur = checkpoint(_small_star(_large_star(cur)))
         sig = _checksum(cur)
         if sig == prev_sig:
             break

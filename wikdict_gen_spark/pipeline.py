@@ -109,7 +109,8 @@ class _Stages(dict):
 def _overlap_cc(out: _Stages) -> None:
     """Fused mode: run connected components on a worker thread from here on.
 
-    CC is an eager driver-side loop of ~75 tiny jobs that only kg_nodes
+    CC is an eager driver-side loop of ~40 tiny jobs (a traced kg_build
+    at 500 concepts counts 77 over its two CC runs) that only kg_nodes
     consumes; on its own thread they fill idle task slots under the
     translation chain and the terminal kg_edges write instead of running
     in front of them (4 interleaved kg_build pairs at 4 vCPU: work_s median

@@ -12,7 +12,10 @@ them:
 - ``SPARK_GRAFT_LOCAL_DIR``: ``spark.local.dir`` for shuffle and spill
   files (default: Spark's own, under ``java.io.tmpdir``).
 
-Any other Spark setting goes through ``get_spark(extra_conf=...)``.
+``session_conf`` fixes only the settings that change behaviour here and
+leaves the rest at PySpark's defaults (a test fails on a fixed setting
+that restates one).  Any other Spark setting goes through
+``get_spark(extra_conf=...)``.
 """
 
 from __future__ import annotations
@@ -84,45 +87,27 @@ def session_conf(
     host_cpus, ram = host or host_resources()
     cpus = _cpus(env, host_cpus)
     conf = {
+        # one JVM is driver and executor; k task slots, one per usable CPU
         "spark.master": f"local[{cpus}]",
+        # the only heap in local mode: 40% of RAM leaves room for Python workers
         "spark.driver.memory": _driver_mem(env, ram),
-        # sandbox intermediates are hundreds of MB: the 64m default lets AQE
-        # coalesce exchanges to a handful of partitions, and that coarse
-        # layout freezes into the stage checkpoints, capping downstream
-        # parallelism (observed: 4-task aggregation stages straggling)
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-        # serialized localCheckpoint blocks stay uncompressed (Spark's
-        # default compresses them): they are re-read by every consumer of a
-        # checkpointed stage and by the session-memoized query trunks
-        "spark.rdd.compress": "false",
-        # at sandbox data sizes more partitions than cores only add
-        # scheduling overhead
+        # one reducer per core: the default 200 has every map task write 200
+        # shuffle blocks for data that fits in a few
         "spark.sql.shuffle.partitions": str(cpus),
-        "spark.default.parallelism": str(cpus),
-        # Arrow is the transport for every pandas UDF in the engine
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Python workers fork from a daemon that has the UDF imports loaded;
         # the JVM starts it with `python -m`, so this package's root goes on
         # the workers' path whatever the driver's working directory
         "spark.python.daemon.module": "wikdict_gen_spark.udf_daemon",
         "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
-        # deterministic sessions: no timezone surprises in timestamp columns
+        # timestamps render the same whatever the host's local zone
         "spark.sql.session.timeZone": "UTC",
-        # long pipelines: reclaim broadcast/shuffle state promptly
-        "spark.cleaner.periodicGC.interval": "2min",
-        "spark.locality.wait": "500ms",
-        # many-stage pipelines generate hundreds of codegen classes; the
-        # default 240m code cache fills and the JIT stops compiling, which
-        # silently triples stage times late in a run
-        "spark.driver.extraJavaOptions":
-            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
+        # batch sessions have no UI reader; without this each concurrent
+        # session on a host binds its own port from 4040 up
         "spark.ui.enabled": "false",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        # local corpora are few big files; small split size keeps scans wide
-        "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
     }
     local_dir = env.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir:
+        # shuffle and spill files on the disk the deployment chose
         conf["spark.local.dir"] = local_dir
     return conf
 
