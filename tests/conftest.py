@@ -3,7 +3,7 @@ import shutil
 
 import pytest
 
-os.environ["SPARK_GRAFT_CPUS"] = "4"  # keep test JVM small
+os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # keep test JVM small
 
 
 @pytest.fixture(scope="session")

@@ -1,5 +1,6 @@
-"""Stage-table runner (wikdict_gen_spark/pipeline.py): the fused mode's
-connected-components worker thread, stop_after and pages-schema
+"""Stage-table runner (wikdict_gen_spark/pipeline.py): fused and
+checkpointed modes agreeing on the connected-components stages, a CC
+failure raising from run_pipeline itself, stop_after and pages-schema
 validation, and the per-table `_metrics` the checkpointed mode records."""
 
 import pytest
@@ -23,7 +24,8 @@ def checkpointed(spark, fixture_dir, tmp_path_factory):
 
 def test_fused_cc_stages_match_checkpointed(spark, fixture_dir, checkpointed,
                                             tmp_path_factory):
-    """canonical and kg_nodes come from the CC worker thread in fused mode."""
+    """alias_edges, canonical and kg_nodes are the same rows when fused
+    mode builds them lazily, without a commit between them."""
     _, ckpt = checkpointed
     work = tmp_path_factory.mktemp("runner_fused")
     fused = run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work), fused=True)
@@ -32,8 +34,10 @@ def test_fused_cc_stages_match_checkpointed(spark, fixture_dir, checkpointed,
     spark.catalog.clearCache()
 
 
-def test_cc_failure_surfaces_as_chained_error(spark, fixture_dir, tmp_path_factory,
-                                              monkeypatch):
+def test_cc_failure_raises_from_run_pipeline(spark, fixture_dir, tmp_path_factory,
+                                            monkeypatch):
+    """Fused mode runs CC in its loop like every other stage: the original
+    error comes out of run_pipeline, after one attempt and no retry."""
     calls = []
 
     def broken(edges):
@@ -42,13 +46,9 @@ def test_cc_failure_surfaces_as_chained_error(spark, fixture_dir, tmp_path_facto
 
     monkeypatch.setattr(canonicalize, "connected_components", broken)
     work = tmp_path_factory.mktemp("runner_cc_fail")
-    out = run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work), fused=True)
-    with pytest.raises(RuntimeError, match="executor lost #1") as err:
-        out["canonical"]
-    # the worker thread's attempt, then the one synchronous retry
-    assert len(calls) == 2
-    assert isinstance(err.value.__cause__, OSError)
-    assert "executor lost #2" in str(err.value.__cause__)
+    with pytest.raises(OSError, match="executor lost #1"):
+        run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work), fused=True)
+    assert len(calls) == 1
     spark.catalog.clearCache()
 
 

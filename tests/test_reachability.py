@@ -9,7 +9,10 @@
 - the checkpoint storage level is built, and a lineage cut made, in one
   place;
 - only the session module reads the ``SPARK_GRAFT_*`` settings, so no
-  script grows a private env knob or a second parse of the core count.
+  script grows a private env knob or a second parse of the core count;
+- no module under wikdict_gen_spark/ imports ``threading`` or
+  ``concurrent.futures``: the pipeline runs its stages on the caller's
+  thread, and a side thread needs a measurement before it comes back.
 """
 
 import ast
@@ -149,3 +152,14 @@ def test_env_settings_read_only_by_the_session():
         and "SPARK_GRAFT_" in p.read_text()
     )
     assert not readers, f"SPARK_GRAFT_ settings outside session.py: {readers}"
+
+
+def test_no_package_module_starts_threads():
+    banned = ("threading", "concurrent.futures")
+    sites = sorted(
+        f"{p.relative_to(ROOT)}: {name}"
+        for p in (ROOT / "wikdict_gen_spark").rglob("*.py")
+        for name in set(_imports(p))
+        if any(name == b or name.startswith(f"{b}.") for b in banned)
+    )
+    assert not sites, f"thread imports under wikdict_gen_spark/: {sites}"

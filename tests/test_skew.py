@@ -1,5 +1,7 @@
 """Skew helpers must be row-for-row equivalent to the plain joins."""
 
+import random
+
 from pyspark.sql import functions as F
 
 from wikdict_gen_spark.operators.skew import hot_keys, salted_join, skew_aware_join
@@ -66,6 +68,42 @@ def test_connected_components_shapes(spark):
         "x": "x", "y": "x", "z": "x",
         "w": "w",
     }
+
+
+def test_connected_components_random_graph(spark):
+    """A seeded multigraph against a union-find with min-id roots: a path
+    of 30 nodes in shuffled id order (depth 29), sparse random components,
+    duplicate and reversed-duplicate edges, and self-loops (one isolated)."""
+    from wikdict_gen_spark.operators.canonicalize import connected_components
+
+    rng = random.Random(21)
+    path = [f"p{i:02d}" for i in range(30)]
+    rng.shuffle(path)
+    edges = list(zip(path[1:], path))
+    pool = [f"r{i:03d}" for i in range(150)]
+    edges += [tuple(rng.sample(pool, 2)) for _ in range(200)]
+    edges += rng.sample(edges, 30)
+    edges += [(v, u) for u, v in rng.sample(edges, 30)]
+    edges += [(n, n) for n in rng.sample(pool + path, 10)] + [("s0", "s0")]
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        parent[max(ru, rv)] = min(ru, rv)
+    want = {n: find(n) for n in list(parent)}
+    assert want["s0"] == "s0" and {want[n] for n in path} == {"p00"}
+
+    df = spark.createDataFrame(edges, "u string, v string")
+    got = {r["node"]: r["canonical"] for r in connected_components(df).collect()}
+    assert got == want
 
 
 def test_connected_components_big_hub(spark):

@@ -1,8 +1,11 @@
 """S7 canonicalization: alias collapse via iterative connected components.
 
-Large-star/small-star (alternating star contraction) over alias/synonym
-edges.  Catalyst cannot express iteration, so this is a driver-side loop
-over DataFrames with:
+Large-star/small-star (alternating star contraction, Kiveris et al.,
+SoCC 2014) over alias/synonym edges.  Catalyst cannot express iteration,
+so this is a driver-side loop over DataFrames with:
+- one shuffle per star step: each node's neighbourhood minimum is a
+  window aggregate over the edges partitioned by node, not an aggregate
+  joined back; only the small-star output is deduplicated,
 - a per-iteration ``partitioning.checkpoint`` to cut lineage (plan
   explosion otherwise); the lazy cut is computed and stored by the same
   job as the iteration's checksum,
@@ -16,7 +19,7 @@ matching the engine-wide min-id tie-break discipline.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .partitioning import checkpoint
@@ -27,13 +30,10 @@ def _large_star(edges: DataFrame) -> DataFrame:
     sym = edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-    mins = mins.select("u", F.least(F.col("mn"), F.col("u")).alias("m"))
     return (
-        sym.join(mins, "u")
+        sym.withColumn("m", F.least(F.min("v").over(Window.partitionBy("u")), F.col("u")))
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .distinct()
     )
 
 
@@ -44,10 +44,11 @@ def _small_star(edges: DataFrame) -> DataFrame:
         F.greatest(F.col("u"), F.col("v")).alias("u"),
         F.least(F.col("u"), F.col("v")).alias("v"),
     )
-    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-    relinked = oriented.join(mins, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
-    self_links = mins.select(F.col("u"), F.col("m").alias("v"))
-    return relinked.unionByName(self_links).distinct()
+    return (
+        oriented.withColumn("m", F.min("v").over(Window.partitionBy("u")))
+        .select(F.explode(F.array("u", "v")).alias("u"), F.col("m").alias("v"))
+        .distinct()
+    )
 
 
 # the alternating-star loop converges in O(log n) rounds; hitting this
@@ -69,12 +70,10 @@ def connected_components(edges: DataFrame) -> DataFrame:
     Every node mentioned in the input appears in the output (including as
     its own canonical when isolated after dedup).
     """
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .unionByName(edges.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    cur = checkpoint(edges.select("u", "v").where(F.col("u") != F.col("v")).distinct())
+    # duplicates and self-loops need no pass of their own: the large star
+    # emits only (v > u) and the small star deduplicates its output
+    base = checkpoint(edges.select("u", "v"))
+    cur = base
     prev_sig = None
     for _ in range(_MAX_ITERATIONS):
         cur = checkpoint(_small_star(_large_star(cur)))
@@ -84,13 +83,15 @@ def connected_components(edges: DataFrame) -> DataFrame:
         prev_sig = sig
     else:
         raise RuntimeError(f"connected_components did not converge in {_MAX_ITERATIONS} iterations")
+    # after convergence each non-root points straight at its component
+    # min; every input node also maps to itself, which never beats the min
     star = cur.select(F.col("u").alias("node"), F.col("v").alias("canonical"))
-    # after convergence each non-root points straight at its component min
-    mapping = (
-        nodes.join(star.groupBy("node").agg(F.min("canonical").alias("canonical")), "node", "left")
-        .select("node", F.coalesce(F.col("canonical"), F.col("node")).alias("canonical"))
+    nodes = base.select(F.explode(F.array("u", "v")).alias("node"))
+    return (
+        star.unionByName(nodes.select("node", F.col("node").alias("canonical")))
+        .groupBy("node")
+        .agg(F.min("canonical").alias("canonical"))
     )
-    return mapping
 
 
 def alias_edges(entry: DataFrame, raw_nym: DataFrame) -> DataFrame:

@@ -12,13 +12,14 @@ Stage DAG (each stage = one committed snapshot, resumable via Catalog):
                                                  kg_nodes ┴─ kg_edges
 
 `STAGES` lists the DAG in topological order; `run_pipeline` walks it in
-one loop.  Kill the driver after any stage and re-run: committed stages
+one synchronous loop in both modes, with no side thread: connected
+components (`canonical`) runs its driver loop in place, in front of the
+KG stages.  Kill the driver after any stage and re-run: committed stages
 are read back, nothing is recomputed, the final snapshot is identical.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
@@ -90,56 +91,7 @@ STAGES = [
     ("kg_nodes", lambda s: materialize.build_nodes(s["entry"], s["importance"], s["canonical"]),
      ["lang"]),
 ]
-_BUILDS = {name: build for name, build, _ in STAGES}
-
-
-class _Stages(dict):
-    """The returned stage dict; a `pending` zero-arg build runs on first read."""
-
-    def __init__(self, **stages: DataFrame) -> None:
-        super().__init__(**stages)
-        self.pending: dict = {}
-
-    def __missing__(self, name: str) -> DataFrame:
-        self[name] = df = self.pending[name]()
-        del self.pending[name]
-        return df
-
-
-def _overlap_cc(out: _Stages) -> None:
-    """Fused mode: run connected components on a worker thread from here on.
-
-    CC is an eager driver-side loop of ~40 tiny jobs (a traced kg_build
-    at 500 concepts counts 77 over its two CC runs) that only kg_nodes
-    consumes; on its own thread they fill idle task slots under the
-    translation chain and the terminal kg_edges write instead of running
-    in front of them (4 interleaved kg_build pairs at 4 vCPU: work_s median
-    44.8 s overlapped vs 50.5 s synchronous).  `entry` is materialized first
-    so the threads never race to compute one checkpoint twice.
-    """
-    out["entry"].count()
-    out["alias_edges"] = _BUILDS["alias_edges"](out)
-    pool = ThreadPoolExecutor(1, thread_name_prefix="cc-loop")
-    cc = pool.submit(_BUILDS["canonical"], out)
-    pool.shutdown(wait=False)
-
-    def canonical() -> DataFrame:
-        try:
-            return cc.result()
-        except Exception as first:
-            # one synchronous retry, with the original failure chained for
-            # the log: a transient executor hiccup shouldn't sink the whole
-            # fused run at its last read
-            try:
-                return _BUILDS["canonical"](out)
-            except Exception as exc:
-                raise RuntimeError(
-                    "connected_components failed on the CC worker thread "
-                    f"(original: {first!r}) and on synchronous retry"
-                ) from exc
-
-    out.pending["canonical"] = canonical
-    out.pending["kg_nodes"] = partial(_BUILDS["kg_nodes"], out)
+_STAGE_NAMES = tuple(name for name, _, _ in STAGES)
 
 
 def run_pipeline(spark: SparkSession, pages_path: str, workdir: str,
@@ -154,6 +106,9 @@ def run_pipeline(spark: SparkSession, pages_path: str, workdir: str,
     fused=True replaces per-stage snapshot commits with lazy local
     checkpoints of FANOUT_STAGES: shared stages materialize once on first
     use and the only durable writes are the caller's terminal actions.
+    Stages are built in order on the calling thread, as in checkpointed
+    mode; the eager connected-components loop runs when `canonical` is
+    reached, so a failure there raises from this call.
     This is the max-throughput shape (a cluster job with only terminal
     Iceberg writes); the default checkpointed mode is the resumable one.
 
@@ -166,27 +121,21 @@ def run_pipeline(spark: SparkSession, pages_path: str, workdir: str,
     The cost is fused-mode fault-tolerance (a lost executor can't recompute
     a local checkpoint) — acceptable: fused mode IS the no-resume shape.
     """
-    if stop_after is not None and stop_after not in _BUILDS:
+    if stop_after is not None and stop_after not in _STAGE_NAMES:
         raise ValueError(
-            f"unknown stop_after {stop_after!r}; valid stages: {', '.join(_BUILDS)}")
+            f"unknown stop_after {stop_after!r}; valid stages: {', '.join(_STAGE_NAMES)}")
     pages = widen_if_narrow(read_pages(spark, pages_path))
     cat = Catalog(spark, workdir)
-    out = _Stages(pages=pages)
+    out = {"pages": pages}
     for name, build, partition_by in STAGES:
-        if name in out or name in out.pending:
-            continue  # bound early by _overlap_cc
         if fused:
             df = build(out)
-            if name in FANOUT_STAGES:
-                df = checkpoint(df)
-            out[name] = df
+            out[name] = checkpoint(df) if name in FANOUT_STAGES else df
         else:
             out[name] = cat.ensure(name, partial(build, out), partition_by)
         if name == "records":
             raws = parse_records(out["extracted"], out["records"])
             out.update((f"raw_{t}", df) for t, df in raws.items())
-        if name == "entry" and fused and stop_after is None:
-            _overlap_cc(out)
         if name == stop_after:
             break
     del out["pages"]
