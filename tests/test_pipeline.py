@@ -235,11 +235,11 @@ class TestDeterminismAndResume:
         assert os.path.getmtime(marker) == mtime_before  # not recomputed
         cols = ["subj", "pred", "obj"]
         assert _rows(out3["kg_edges"], cols) == _rows(built["kg_edges"], cols)
-        # every stage after the resume point must ALSO be durably committed —
-        # guards against any mode-flag regression that silently drops the
-        # back half of the pipeline to the uncommitted in-memory path
-        for stage in ["infer", "infer_grouped", "translation_graded",
-                      "simple_translation", "canonical", "kg_edges", "kg_nodes"]:
+        # every cut stage after the resume point must ALSO be durably
+        # committed — guards against any mode-flag regression that silently
+        # drops the back half of the pipeline to the uncommitted in-memory
+        # path (lazy chain stages such as infer_grouped commit nothing)
+        for stage in ["infer", "simple_translation", "canonical", "kg_edges", "kg_nodes"]:
             assert os.path.exists(os.path.join(work3, stage, "_COMMITTED")), stage
         # resume past the terminal stage touches nothing: all markers stable
         mtimes = {

@@ -61,7 +61,7 @@ class Catalog:
         self._marker(name).touch()
         return self.read(name)
 
-    def ensure(self, name: str, build, partition_by: list[str] | None = None) -> DataFrame:
+    def ensure(self, name: str, build, partition_by: list[str] | None) -> DataFrame:
         """Resume unit: return the committed table, or build+commit it."""
         if self.exists(name):
             return self.read(name)

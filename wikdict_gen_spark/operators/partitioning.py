@@ -30,8 +30,8 @@ design), so the round-robin move is results-neutral — the oracle gate
 pins that.
 
 Lineage cut: ``checkpoint`` is the one way the engine cuts a logical plan
-(pipeline fan-out stages, operator trunks read by several consumers,
-iterative loops, the contract's shared derived inputs).
+(the pipeline's cut stages in fused mode, operator trunks read by several
+consumers, iterative loops, the contract's shared derived inputs).
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """End-to-end KG-construction pipeline: pages -> kg.nodes + kg.edges.
 
-Stage DAG (each stage = one committed snapshot, resumable via Catalog):
+Stage DAG:
 
     pages ── extract ── raw_* ──┬─ entry ─┬─ importance ─┐
                                 │         ├─ form        │
@@ -12,10 +12,13 @@ Stage DAG (each stage = one committed snapshot, resumable via Catalog):
                                                  kg_nodes ┴─ kg_edges
 
 `STAGES` lists the DAG in topological order; `run_pipeline` walks it in
-one synchronous loop in both modes, with no side thread: connected
-components (`canonical`) runs its driver loop in place, in front of the
-KG stages.  Kill the driver after any stage and re-run: committed stages
-are read back, nothing is recomputed, the final snapshot is identical.
+one synchronous loop in both modes.  Lineage is cut only at `CUT_STAGES`
+and at the `stop_after` target: a committed snapshot (Catalog) in the
+default checkpointed mode, a lazy local checkpoint in fused mode.  Every
+other stage stays lazy, so Catalyst fuses it into its consumer's job.
+Kill the driver after any committed stage and re-run: committed stages
+are read back and never recomputed, lazy stages after the last commit
+are rebuilt from it, and the final snapshot is identical.
 """
 
 from __future__ import annotations
@@ -29,28 +32,32 @@ from wikdict_gen_spark.operators import canonicalize, generic, infer, materializ
 from wikdict_gen_spark.operators.extract import extract_text, parse_records, read_pages, records
 from wikdict_gen_spark.operators.partitioning import checkpoint, widen_if_narrow
 
-# Stages referenced by 2+ downstream consumers.  In fused mode these are
-# the ONLY lineage-cut points: a re-referenced stage must be checkpointed
-# (its analyzed subtree would otherwise be cloned into every consumer —
-# exponential plan blowup — and its computation repeated), while a
-# linear-chain stage is cheaper left lazy so Catalyst fuses it into its
-# consumer's job (fewer serial job barriers, wider codegen spans).  A
-# stage consumed once from the returned dict AND once downstream (e.g.
-# infer_grouped if a caller materializes it separately) recomputes from
-# the nearest upstream checkpoint — bounded by construction.
-FANOUT_STAGES = frozenset({
+# The stages where run_pipeline cuts lineage (besides the stop_after
+# target), each for one of three reasons:
+# - shared: read by 2+ downstream stages.  A logical plan is a tree, so
+#   each re-reference would clone its analyzed subtree into every consumer
+#   (exponential plan blowup) and repeat its computation;
+# - eager: the stage runs Spark jobs when built, which a resume must not
+#   repeat;
+# - product: a table the caller reads, so it is computed once.
+# A linear-chain stage is cheaper left lazy: Catalyst fuses it into its
+# consumer's job (fewer serial job barriers, wider codegen spans).
+CUT_STAGES = frozenset({
     # NOT "extracted": parse_records reads the records relation, never the
-    # extracted text itself, so records() is its only real consumer — the
-    # full cleaned corpus text flows straight into the record explode
-    # without being materialized a second time
-    "records",            # seven raw-table filters
-    "entry",              # importance, translation_base, alias_edges, kg_*
-    "translation_clean",  # importance, translation_base
-    "importance",         # translation_base, translation, simple_translation, kg_nodes
-    "translation_base",   # hot-key detection scan + the link join itself
-    "all_trans",          # backlink, indirect, direct/reverse/probe in fuse
-    "indirect",           # fuse union + anti-join key projection
-    "infer",              # infer_grouped, simple_translation, kg_edges
+    # extracted text itself, so records() is its only real consumer
+    "records",              # shared: seven raw-table filters
+    "entry",                # shared: importance, translation_base, alias_edges, kg_*
+    "translation_clean",    # shared: importance, translation_base
+    "importance",           # shared: translation_base, translation, simple_translation, kg_nodes
+    "translation_base",     # shared: hot-key detection scan + the link join itself
+    "all_trans",            # shared: backlink, indirect, direct/reverse/probe in fuse
+    "indirect",             # shared: fuse union + anti-join key projection
+    "infer",                # shared: infer_grouped, simple_translation, kg_edges
+    "canonical",            # eager: the connected-components driver loop
+    "translation_grouped",  # product
+    "simple_translation",   # product
+    "kg_edges",             # product
+    "kg_nodes",             # product
 })
 
 
@@ -98,41 +105,32 @@ def run_pipeline(spark: SparkSession, pages_path: str, workdir: str,
                  stop_after: str | None = None, fused: bool = False) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline; returns all stage DataFrames.
 
-    stop_after: name of the last stage to commit (for resume testing);
-    an unknown name raises ValueError before any Spark job runs.  A pages
-    corpus whose schema is not PAGES (operators/extract.py) raises
-    ValueError at the read, before the workdir is created.
+    stop_after: name of the last stage to build, which is cut like a
+    `CUT_STAGES` member (for resume testing); an unknown name raises
+    ValueError before any Spark job runs.  A pages corpus whose schema is
+    not PAGES (operators/extract.py) raises ValueError at the read, before
+    the workdir is created.
 
-    fused=True replaces per-stage snapshot commits with lazy local
-    checkpoints of FANOUT_STAGES: shared stages materialize once on first
-    use and the only durable writes are the caller's terminal actions.
-    Stages are built in order on the calling thread, as in checkpointed
-    mode; the eager connected-components loop runs when `canonical` is
-    reached, so a failure there raises from this call.
-    This is the max-throughput shape (a cluster job with only terminal
-    Iceberg writes); the default checkpointed mode is the resumable one.
-
-    Why localCheckpoint and not persist(): logical plans are trees, not
-    DAGs — every re-reference of a cached stage clones its entire analyzed
-    subtree, so 20 composed stages blow the plan up exponentially (measured
-    >200k plan nodes at the fuse stage).  localCheckpoint truncates the
-    *logical* lineage to a LogicalRDD while the RDD graph still shares each
-    stage's computation; eager=False keeps stages lazy until first use.
-    The cost is fused-mode fault-tolerance (a lost executor can't recompute
-    a local checkpoint) — acceptable: fused mode IS the no-resume shape.
+    The mode picks the cut once.  Checkpointed (default): `Catalog.ensure`
+    commits each cut stage to the workdir, or reads it back if committed.
+    fused=True: a lazy `partitioning.checkpoint` per cut stage, no workdir
+    is created, and the only durable writes are the caller's terminal
+    actions -- the max-throughput shape (a cluster job with only terminal
+    Iceberg writes), with no resume.  Either way the eager
+    connected-components loop runs when `canonical` is built, so a failure
+    there raises from this call.
     """
     if stop_after is not None and stop_after not in _STAGE_NAMES:
         raise ValueError(
             f"unknown stop_after {stop_after!r}; valid stages: {', '.join(_STAGE_NAMES)}")
     pages = widen_if_narrow(read_pages(spark, pages_path))
-    cat = Catalog(spark, workdir)
+    cut = ((lambda name, build, partition_by: checkpoint(build())) if fused
+           else Catalog(spark, workdir).ensure)
     out = {"pages": pages}
     for name, build, partition_by in STAGES:
-        if fused:
-            df = build(out)
-            out[name] = checkpoint(df) if name in FANOUT_STAGES else df
-        else:
-            out[name] = cat.ensure(name, partial(build, out), partition_by)
+        lazy = partial(build, out)
+        is_cut = name in CUT_STAGES or name == stop_after
+        out[name] = cut(name, lazy, partition_by) if is_cut else lazy()
         if name == "records":
             raws = parse_records(out["extracted"], out["records"])
             out.update((f"raw_{t}", df) for t, df in raws.items())
